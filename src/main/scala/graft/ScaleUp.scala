@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetFooters
 
 /** Scale-factor multiplier for BENCHMARKING ONLY (never for oracle runs):
   * replicates each driver-provided table `factor`× with key spaces shifted
@@ -47,7 +48,8 @@ object ScaleUp {
     // resolved ts type
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame =
+      ParquetFooters.read(spark, s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =
       df.drop("copy").write.mode("overwrite").parquet(s"$dst/$t.parquet")
 

@@ -3,6 +3,7 @@ package graft.api
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetFooters
 import graft.engine._
 
 /** Request dispatch — the engine's API surface, mirroring the reference's
@@ -206,7 +207,7 @@ final class Dispatch(
         // select → save → LEDGER (train_models.py:236-250): the saved
         // model's params, cross-validated RMSE and training counts append
         // to the model-metadata ledger next to the model itself
-        val pc = spark.read.parquet(s"$workDir/cf/playcounts")
+        val pc = ParquetFooters.read(spark, s"$workDir/cf/playcounts")
         val grid = graft.recs.Als.trainWithGridDetailed(pc,
           ranks = Seq(8), regParams = Seq(0.1), alphas = Seq(3.0))
         grid.model.write.overwrite().save(s"$workDir/cf/model")
@@ -216,7 +217,7 @@ final class Dispatch(
             dataframeId = "playcounts", grid = grid, playcounts = pc))
         status("model", s"$workDir/cf/model")
       case "cf.recommendations.recording.recommendations" =>
-        val pc = spark.read.parquet(s"$workDir/cf/playcounts")
+        val pc = ParquetFooters.read(spark, s"$workDir/cf/playcounts")
         val model = org.apache.spark.ml.recommendation.ALSModel
           .load(s"$workDir/cf/model")
         val raw = graft.recs.Als.recommend(model, pc, k = 50)
@@ -290,7 +291,7 @@ final class Dispatch(
           // corpus) and the additive combine over per-user-prefix
           // partials is EXACT because chunks partition users. q216
           // driver-proves chunked ≡ direct aggregation.
-          val mlhdListens = spark.read.parquet(s"$workDir/mlhd")
+          val mlhdListens = ParquetFooters.read(spark, s"$workDir/mlhd")
           // cast: digit-only chunk dirs type-infer as int on read; the
           // predicates still reference only the partition column, so
           // each chunk job (the non-hex catch-all included) stays

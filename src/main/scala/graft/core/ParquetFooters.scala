@@ -1,72 +1,142 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, GlobFilter, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
-/** Exact row counts of landed parquet trees from file FOOTERS alone —
-  * a driver-side metadata read, zero Spark jobs.
+/** The one module that opens parquet footers. Both of its jobs are
+  * driver-side metadata reads that launch no Spark job:
   *
-  * FEW-FILE TREES ONLY. Footer opens cost ~4-5 ms each on the bench
-  * boxes even through the bounded pool below (parquet-hadoop footer
-  * deserialization + Hadoop conf access dominate, not I/O — measured
-  * round 14: 512 files ≈ 2.3 s driver-side while a distributed count()
-  * job over the same tree is ~0.2 s, its footer reads 32-way parallel
-  * through the scheduler). So this helper is for trees whose file count
-  * is small and bounded — an AQE-coalesced stage dir — and callers that
-  * cannot bound the count use [[rowsIfFew]] and fall back to a count
-  * job. q230 regressed 27 → 47 s when round 14 first pointed
-  * PairState's bookkeeping counts (wide tasks × pk-dirs
-  * dynamic-partition trees) here — reverted to count jobs there.
+  *   - [[read]]: every schemaless parquet read in the engine. Spark's own
+  *     `spark.read.parquet` infers a schema with a one-task job that
+  *     opens a single footer (58-78 ms of scheduling and driver round
+  *     trip per read, warm local[4] JVM on a 4-cpu host); this opens that
+  *     same footer on the driver (4-7 ms there) and hands the schema to
+  *     `spark.read.schema`.
+  *   - [[rowsIfFew]]: exact row counts of few-file landed trees.
   *
-  * ADVICE r13 (PairState.compact) context: sizing pinned width from
-  * file BYTES guesses the serialized-row expansion of a compressed
-  * columnar file; footer ROWS would feed the width formula exactly, but
-  * only when the tree is narrow enough for driver reads — compact's
-  * segment trees are not, so that site uses the conservative
-  * bytes-based width instead. */
+  * FEW FILES ONLY. Footer opens cost ~4-5 ms each even through the
+  * bounded pool below (parquet-hadoop footer deserialization + Hadoop
+  * conf access dominate, not I/O — measured round 14: 512 files
+  * ≈ 2.3 s driver-side while a distributed count() job over the same tree
+  * is ~0.2 s, its footer reads 32-way parallel through the scheduler).
+  * [[read]] opens exactly one footer per call; callers of [[rowsIfFew]]
+  * bound the file count and fall back to a count job above it. q230
+  * regressed 27 → 47 s when round 14 first pointed PairState's
+  * bookkeeping counts (wide tasks × pk-dirs dynamic-partition trees) at
+  * footer counts — reverted to count jobs there.
+  *
+  * ADVICE r13 (PairState.compact) context: sizing pinned width from file
+  * BYTES guesses the serialized-row expansion of a compressed columnar
+  * file; footer ROWS would feed the width formula exactly, but only when
+  * the tree is narrow enough for driver reads — compact's segment trees
+  * are not, so that site uses the conservative bytes-based width
+  * instead. */
 object ParquetFooters {
 
-  /** Sum of footer row counts over every `*.parquet` file under `dirs`
-    * (recursive). Empty or file-less dirs count 0 — the schema'd-read
-    * convention for empty state (StateTable.stage scaladoc). */
-  def rows(spark: SparkSession, dirs: Seq[String]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    sumFooters(listParquet(conf, dirs), conf)
+  /** `spark.read.parquet(paths: _*)` with the schema read on the driver.
+    *
+    * The schema comes from the footer of the file Spark's inference
+    * reads when `mergeSchema` is off and no summary file exists (the
+    * engine writes none): the first by path among the files Spark's file
+    * index would list. It goes through the same
+    * `ParquetFileFormat.readSchemaFromFooter` call and a
+    * `ParquetToSparkSchemaConverter` built from the session conf, so the
+    * frame has exactly the schema `spark.read.parquet` infers: Spark
+    * makes file-source data schemas nullable either way, and still takes
+    * partition columns (`year=`/`month=` directories) from the paths.
+    * When the paths hold no data file this is `spark.read.parquet`
+    * itself, so a missing or empty tree fails with Spark's own error. */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    readWith(spark, spark.sessionState.conf, None, paths)
+
+  /** [[read]] with the footer's types converted under `conf` instead of
+    * the session's (the session conf is never written), and, when `glob`
+    * is set, only files whose names match it (Spark's `pathGlobFilter`). */
+  def readWith(
+      spark: SparkSession, conf: SQLConf, glob: Option[String],
+      paths: Seq[String]): DataFrame = {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val reader = glob.foldLeft(spark.read)(_.option("pathGlobFilter", _))
+    paths.flatMap(files(hadoopConf, _, glob).nextOption())
+        .minByOption(_.getPath.toString) match {
+      case Some(f) =>
+        reader.schema(footerSchema(f, hadoopConf, conf)).parquet(paths: _*)
+      case None => reader.parquet(paths: _*)
+    }
   }
 
-  /** [[rows]], but gives up (returns −1) when the tree holds more than
-    * `maxFiles` parquet files — the caller then falls back to a
-    * distributed count. Keeps the driver-side path structurally unable
-    * to hit the wide-tree stall documented above. */
+  /** Footer row counts summed over every `*.parquet` file under `dirs`
+    * (recursive; empty or file-less dirs count 0 — the schema'd-read
+    * convention for empty state, StateTable.stage scaladoc), or −1 when
+    * the tree holds more than `maxFiles` of them — the caller then falls
+    * back to a distributed count. Keeps the driver-side path structurally
+    * unable to hit the wide-tree stall documented above. */
   def rowsIfFew(
       spark: SparkSession, dirs: Seq[String], maxFiles: Int): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = listParquet(conf, dirs)
+    val files = leafFiles(conf, dirs, None)
+      .filter(_.getPath.getName.endsWith(".parquet"))
     if (files.size > maxFiles) -1L else sumFooters(files, conf)
   }
 
-  private def listParquet(
-      conf: org.apache.hadoop.conf.Configuration, dirs: Seq[String])
-      : Seq[org.apache.hadoop.fs.LocatedFileStatus] =
-    dirs.flatMap { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Seq.empty
-      else {
-        val b = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.isFile && f.getPath.getName.endsWith(".parquet")) b += f
-        }
-        b.result()
-      }
-    }
+  /** Data files under `paths` as Spark's file index lists them: globs
+    * expanded, directories walked, names Spark treats as hidden skipped
+    * (`_x`/`.x` except partition `_k=v` dirs, and `._COPYING_`
+    * leftovers); `glob` filters file names. A path that does not exist
+    * contributes nothing. */
+  def leafFiles(
+      conf: Configuration, paths: Seq[String], glob: Option[String])
+      : Seq[FileStatus] =
+    paths.flatMap(files(conf, _, glob))
 
-  private def sumFooters(
-      files: Seq[org.apache.hadoop.fs.LocatedFileStatus],
-      conf: org.apache.hadoop.conf.Configuration): Long =
+  /** [[leafFiles]] of one path, lazily and in path order, so finding the
+    * first file lists only the directories on the way to it, not the
+    * whole tree. Sorting each directory's entries by path, with a
+    * trailing `/` on directories, yields the files in the order of their
+    * full paths, the order Spark's inference picks from. */
+  private def files(conf: Configuration, path: String, glob: Option[String])
+      : Iterator[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val accept = glob.map(new GlobFilter(_))
+    def key(s: FileStatus) =
+      s.getPath.toString + (if (s.isDirectory) "/" else "")
+    def walk(d: Path): Iterator[FileStatus] =
+      fs.listStatus(d).filterNot(s => hidden(s.getPath.getName)).sortBy(key)
+        .iterator.flatMap { s =>
+          if (s.isDirectory) walk(s.getPath)
+          else if (accept.forall(_.accept(s.getPath))) Iterator.single(s)
+          else Iterator.empty
+        }
+    // a root file lists as itself, so its own name is filtered too
+    Option(fs.globStatus(p)).iterator.flatMap(_.sortBy(key))
+      .flatMap(r => walk(r.getPath))
+  }
+
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  private def footerSchema(
+      f: FileStatus, hadoopConf: Configuration, conf: SQLConf): StructType = {
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(f, hadoopConf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(f.getPath, meta), new ParquetToSparkSchemaConverter(conf))
+  }
+
+  private def sumFooters(files: Seq[FileStatus], conf: Configuration): Long =
     if (files.isEmpty) 0L
-    else if (files.size == 1) readOne(files.head, conf)
+    else if (files.size == 1) readRows(files.head, conf)
     else {
       val threads = math.min(32, files.size)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
@@ -74,17 +144,14 @@ object ParquetFooters {
         import scala.jdk.CollectionConverters._
         val tasks: java.util.List[java.util.concurrent.Callable[Long]] =
           files.map { f =>
-            (() => readOne(f, conf)): java.util.concurrent.Callable[Long]
+            (() => readRows(f, conf)): java.util.concurrent.Callable[Long]
           }.asJava
         pool.invokeAll(tasks).asScala.map(_.get()).sum
       } finally pool.shutdown()
     }
 
-  private def readOne(
-      f: org.apache.hadoop.fs.LocatedFileStatus,
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+  private def readRows(f: FileStatus, conf: Configuration): Long = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
     try r.getRecordCount
     finally r.close()
   }

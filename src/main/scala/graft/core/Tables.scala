@@ -6,8 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Each table is a single parquet file under the scale-factor dir. At 100 TB
   * these would be partitioned directories; reads stay identical
-  * (`spark.read.parquet` handles both), and every query keeps filters and
+  * ([[ParquetFooters.read]] handles both), and every query keeps filters and
   * projections declarative so Catalyst pushes them into the scan.
+  *
+  * A load's schema is read on the driver from the table's footer by
+  * [[ParquetFooters]], the only module that opens footers, so loading a
+  * table launches no Spark job; the frame has exactly the schema
+  * `spark.read.parquet` would infer.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +20,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$table.parquet")
+    ParquetFooters.read(spark, s"$sfDir/$table.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -35,25 +40,20 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    // The nanos legacy flag is scoped to THIS load, not leaked into the
-    // session: try the plain read first (the common encodings need no
-    // flag); only a PARQUET_TYPE_ILLEGAL nanos failure retries under the
-    // flag, restoring the prior conf value immediately after. Schema
-    // conversion happens at load time, so the returned frame keeps its
-    // nanos-as-long mapping through later lazy execution (probed).
+    // The common encodings need no flag. Only a PARQUET_TYPE_ILLEGAL
+    // nanos failure retries, converting the footer under a CLONE of the
+    // session conf with the legacy nanos flag on: the session conf is
+    // never written, so a concurrent request on the same session cannot
+    // see the flag. The frame carries the converted schema (`ts: bigint`),
+    // so its later lazy scans need no flag either.
     val df =
       try load(s, d, "events")
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("TIMESTAMP(NANOS") =>
-          val key = "spark.sql.legacy.parquet.nanosAsLong"
-          val prior = s.conf.getOption(key)
-          s.conf.set(key, "true")
-          try load(s, d, "events")
-          finally prior match {
-            case Some(v) => s.conf.set(key, v)
-            case None    => s.conf.unset(key)
-          }
+          val nanos = s.sessionState.conf.clone()
+          nanos.setConfString("spark.sql.legacy.parquet.nanosAsLong", "true")
+          ParquetFooters.readWith(s, nanos, None, Seq(s"$d/events.parquet"))
       }
     df.schema("ts").dataType match {
       case LongType         => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

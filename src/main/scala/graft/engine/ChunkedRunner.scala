@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetFooters
 
 /** Out-of-core chunked execution — the reference's pattern for datasets
   * whose intermediate state exceeds cluster memory (MLHD similarity runs
@@ -67,7 +68,7 @@ object ChunkedRunner {
             scala.concurrent.duration.Duration.Inf)
         } finally pool.shutdown()
       }
-    val partials = spark.read.parquet(chunkPaths: _*)
+    val partials = ParquetFooters.read(spark, chunkPaths: _*)
     provider.stats(provider.combine(partials))
   }
 }

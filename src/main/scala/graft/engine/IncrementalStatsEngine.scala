@@ -3,6 +3,7 @@ package graft.engine
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetFooters
 
 /** A stat family pluggable into the incremental engine.
   *
@@ -69,8 +70,10 @@ final class IncrementalStatsEngine(spark: SparkSession, val workDir: String) {
   }
 
   /** Full disk-backed run: reuse the cached partial if its bookkeeping
-    * matches [from, to), else recompute from the store; then merge with
-    * incremental listens and return final stats. */
+    * matches [from, to) and the store's [[ListenStore.partialInputs]]
+    * (so a base rewrite or an imported deletion recomputes it), else
+    * recompute from the store; then merge with incremental listens and
+    * return final stats. */
   def run(
       statName: String,
       provider: StatsProvider,
@@ -79,11 +82,15 @@ final class IncrementalStatsEngine(spark: SparkSession, val workDir: String) {
       to: Timestamp,
       onlyInc: Boolean = false): DataFrame = {
     import spark.implicits._
+    // listed before the partial is computed: a deletion landing while it
+    // runs leaves the recorded inputs stale, so the next run recomputes
+    val inputs = store.partialInputs
     val usable = exists(bookPath(statName)) && {
       val b = spark.read.schema(
         org.apache.spark.sql.Encoders.product[Bookkeeping].schema)
         .json(bookPath(statName)).as[Bookkeeping].collect()
-      b.headOption.exists(r => r.from_date == from && r.to_date == to)
+      b.headOption.exists(r =>
+        r.from_date == from && r.to_date == to && r.inputs == inputs)
     }
     if (!usable) {
       // recompute the base partial (base listens only — incremental is
@@ -93,10 +100,11 @@ final class IncrementalStatsEngine(spark: SparkSession, val workDir: String) {
       val partial = provider.aggregate(
         store.baseListensRange(from, to)).transform(graft.core.Pin.apply)
       partial.write.mode("overwrite").parquet(partialPath(statName))
-      Seq(Bookkeeping(from, to, new Timestamp(System.currentTimeMillis())))
+      Seq(Bookkeeping(from, to, new Timestamp(System.currentTimeMillis()),
+          inputs))
         .toDS().repartition(1).write.mode("overwrite").json(bookPath(statName))
     }
-    val existing = spark.read.parquet(partialPath(statName))
+    val existing = ParquetFooters.read(spark, partialPath(statName))
     val inc = store.retractDeleted(store.incrementalListens)
       .filter(col("listened_at") >= lit(from) && col("listened_at") < lit(to))
     IncrementalStatsEngine.merge(provider, existing, inc, onlyInc)

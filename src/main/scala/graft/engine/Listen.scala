@@ -47,9 +47,11 @@ object Listen {
 
 /** Bookkeeping record for a cached partial aggregate
   * (reference `BOOKKEEPING_SCHEMA`, schema.py:17-21): the listen-time range
-  * the partial covers and when it was computed. */
+  * the partial covers, when it was computed, and the store files it was
+  * computed from ([[ListenStore.partialInputs]]). */
 final case class Bookkeeping(
-    from_date: Timestamp, to_date: Timestamp, updated_at: Timestamp)
+    from_date: Timestamp, to_date: Timestamp, updated_at: Timestamp,
+    inputs: Seq[String])
 
 /** High-water marks for incremental ingestion
   * (reference `INCREMENTAL_BOOKKEEPING_SCHEMA`, schema.py:23-26). */

@@ -3,6 +3,7 @@ package graft.engine
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetFooters
 
 /** Physical listen storage: year/month-partitioned parquet with an
   * append-only incremental sibling and read-time deletion retraction.
@@ -104,7 +105,7 @@ final class ListenStore(spark: SparkSession, root: String) {
     // location with fresh metadata); computed from the written parquet —
     // a pruned 2-column scan, once per import, never per request. An
     // empty write leaves no readable parquet → clear the metadata.
-    scala.util.Try(frameHighWater(spark.read.parquet(basePath)
+    scala.util.Try(frameHighWater(ParquetFooters.read(spark, basePath)
       .select(col("listened_at"), col("created")))).toOption.flatten match {
       case Some((l, c)) => writeMetadata(l, c)
       case None => fsFor(metadataPath).delete(
@@ -149,11 +150,26 @@ final class ListenStore(spark: SparkSession, root: String) {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   def baseListens: DataFrame =
-    if (exists(basePath)) spark.read.parquet(basePath).drop("year", "month")
+    if (exists(basePath))
+      ParquetFooters.read(spark, basePath).drop("year", "month")
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Listen.schema)
 
   def incrementalListens: DataFrame = readOrEmpty(incPath, Listen.schema)
+
+  /** Paths, relative to the store root, of the data files under the base
+    * and the two deletion trees: what a cached base partial depends on.
+    * Every write to those trees, an overwrite included, lands part files
+    * with a fresh per-write name, so an unchanged list means unchanged
+    * base listens and retractions, with no reliance on modification
+    * times. */
+  def partialInputs: Seq[String] = {
+    val rootUri = fsFor(root).makeQualified(
+      new org.apache.hadoop.fs.Path(root)).toUri.getPath
+    ParquetFooters.leafFiles(spark.sparkContext.hadoopConfiguration,
+        Seq(basePath, deletedPath, deletedHistoryPath), None)
+      .map(_.getPath.toUri.getPath.stripPrefix(rootUri)).sorted
+  }
 
   /** Base-only listens in [from, to), deletions retracted — the input to a
     * cached partial aggregate (incremental listens are aggregated
@@ -166,7 +182,7 @@ final class ListenStore(spark: SparkSession, root: String) {
   def baseListensRange(from: Timestamp, to: Timestamp): DataFrame = {
     val base =
       if (exists(basePath)) {
-        val b = spark.read.parquet(basePath)
+        val b = ParquetFooters.read(spark, basePath)
         val fromKey = lit(from.toLocalDateTime.getYear * 100 +
           from.toLocalDateTime.getMonthValue)
         val toKey = lit(to.toLocalDateTime.getYear * 100 +
@@ -192,12 +208,12 @@ final class ListenStore(spark: SparkSession, root: String) {
   def retractDeleted(listens: DataFrame): DataFrame = {
     val afterRows =
       if (exists(deletedPath)) {
-        val del = spark.read.parquet(deletedPath)
+        val del = ParquetFooters.read(spark, deletedPath)
           .select(Listen.deletionKey.map(col): _*)
         listens.join(del, Listen.deletionKey, "left_anti")
       } else listens
     if (exists(deletedHistoryPath)) {
-      val h = spark.read.parquet(deletedHistoryPath)
+      val h = ParquetFooters.read(spark, deletedHistoryPath)
         .select(col("user_id"), col("max_created"))
       afterRows.join(h, Seq("user_id"), "left")
         .filter(col("max_created").isNull ||

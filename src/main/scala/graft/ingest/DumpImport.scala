@@ -3,6 +3,7 @@ package graft.ingest
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetFooters
 import graft.engine.ListenStore
 
 /** Dump-import orchestration over the ListenStore primitives (reference
@@ -40,7 +41,7 @@ final class DumpImport(
 
   /** The import ledger: (dump_id, dump_type, imported_at). */
   def importMetadata: DataFrame =
-    if (exists(metaPath)) spark.read.parquet(metaPath)
+    if (exists(metaPath)) ParquetFooters.read(spark, metaPath)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
@@ -64,7 +65,7 @@ final class DumpImport(
 
   /** Per-user incremental high-water marks: (user_id, created). */
   def incrementalHighWater: DataFrame =
-    if (exists(incUsersPath)) spark.read.parquet(incUsersPath)
+    if (exists(incUsersPath)) ParquetFooters.read(spark, incUsersPath)
     else spark.emptyDataFrame
 
   /** Full-dump import: location swap + stats invalidation. `dumpType`

@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.input_file_name
 import org.apache.spark.sql.types.StructType
+import graft.core.ParquetFooters
 
 /** File-based ingestion surfaces beyond plain parquet:
   *
@@ -31,5 +32,6 @@ object FileIngest {
     * processing: one user-prefix chunk at a time bounds shuffle size — the
     * reference's out-of-core pattern for its 27B-listen dataset). */
   def globScan(spark: SparkSession, dir: String, glob: String): DataFrame =
-    spark.read.option("pathGlobFilter", glob).parquet(dir)
+    ParquetFooters.readWith(
+      spark, spark.sessionState.conf, Some(glob), Seq(dir))
 }

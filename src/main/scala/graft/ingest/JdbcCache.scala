@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.ParquetFooters
 
 /** JDBC dimension-cache import (reference postgres/utils.py:8-17 +
   * postgres/artist.py etc.): the whole selection query is pushed down to
@@ -33,5 +34,5 @@ object JdbcCache {
 
   /** Read a previously imported cache. */
   def readCache(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetFooters.read(spark, path)
 }

@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.ParquetFooters
 
 /** MLHD+ dump ingestion (reference mlhd/download.py), Spark-first.
   *
@@ -81,7 +82,7 @@ object MlhdImport {
     * at a time (download.py:30-59). */
   def postProcess(spark: SparkSession, rawDir: String, outDir: String): Unit =
     Chunks.foreach { c =>
-      val raw = spark.read.parquet(rawDir).filter(col("chunk") === c)
+      val raw = ParquetFooters.read(spark, rawDir).filter(col("chunk") === c)
       raw.select(
           col("user_id"),
           timestamp_seconds(col("listened_at")).as("listened_at"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.ParquetFooters
 
 /** Distributed triangle counting — the density diagnostic for the
   * dedup/similarity pair graphs this engine produces (a near-dup
@@ -234,7 +235,7 @@ object Triangles {
       // surviving form — release the placement (at this size a stage;
       // deleting it halves the chunked regime's peak disk footprint)
       oP.release()
-      val oAll = spark.read.parquet(s"$dir/oriented")
+      val oAll = ParquetFooters.read(spark, s"$dir/oriented")
       val chunkWidth = math.max(
         spark.sessionState.conf.numShufflePartitions,
         math.min(4096L,
@@ -250,7 +251,7 @@ object Triangles {
       // disk footprint (partials are triangle-sized, oriented is
       // edge-sized)
       graft.core.TempWork.delete(s"$dir/oriented")
-      spark.read.parquet((0 until nChunks).map(i => s"$dir/t$i"): _*)
+      ParquetFooters.read(spark, (0 until nChunks).map(i => s"$dir/t$i"): _*)
     }
   }
 

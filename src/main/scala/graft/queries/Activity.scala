@@ -58,8 +58,7 @@ object Activity {
           PARTITION BY user_id ORDER BY cnt DESC, event_type) AS rn
         FROM (SELECT user_id, event_type, count(*) AS cnt FROM events
           GROUP BY 1, 2) a) b
-      WHERE rn <= 3 GROUP BY user_id ORDER BY user_id"""),
-    bench = true)
+      WHERE rn <= 3 GROUP BY user_id ORDER BY user_id"""))
 
   // ---------------------------------------------------------------- q36
   /** Time-range densification: per-day listen counts over the full data

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{ParquetFooters, Tables}
 import graft.engine.{IncrementalStatsEngine, TopEntityStats, SitewideEntityStats, ListenerStats}
 import graft.similarity.SessionSimilarity
 
@@ -62,8 +62,7 @@ object EngineQueries {
           PARTITION BY user_id ORDER BY cnt DESC, event_type) AS rn
         FROM (SELECT user_id, event_type, count(*) AS cnt FROM events
           GROUP BY 1, 2) a) b
-      GROUP BY user_id) c ORDER BY user_id"""),
-    bench = true)
+      GROUP BY user_id) c ORDER BY user_id"""))
 
   // ---------------------------------------------------------------- q72
   /** Only-incremental recompute skip: stats restricted to users with
@@ -139,8 +138,7 @@ object EngineQueries {
         GROUP BY 1, 2 HAVING sum(contrib) >= 2)
       SELECT e_a, e_b, score, row_number() OVER (
         ORDER BY score DESC, e_a, e_b) AS rank
-      FROM scored ORDER BY score DESC, e_a, e_b LIMIT 50"""),
-    bench = true)
+      FROM scored ORDER BY score DESC, e_a, e_b LIMIT 50"""))
 
   // ---------------------------------------------------------------- q73
   /** Sitewide capped entity chart via the SitewideEntityStats provider. */
@@ -352,7 +350,7 @@ object EngineQueries {
             Seq("event_type"), "user_id")
           .write.parquet(s"$work/chunk$c")
       }
-      val partials = s.read.parquet(
+      val partials = ParquetFooters.read(s,
         s"$work/chunk0", s"$work/chunk1", s"$work/chunk2")
       val served = SketchDistinct.serve(partials, Seq("event_type"))
       val exact = ev.groupBy(col("event_type"))
@@ -392,7 +390,7 @@ object EngineQueries {
       // stateful width from the measured staged volume, scoped to the
       // stream (StreamScale scaladoc): the windowed aggregate's state
       // stores commit per partition per micro-batch
-      val nStaged = s.read.parquet(s"$work/stage").count()
+      val nStaged = ParquetFooters.read(s, s"$work/stage").count()
       graft.core.ScopedConf.withShufflePartitions(
         s, graft.streaming.StreamScale.width(nStaged)) {
         val stream = s.readStream.schema(ev.schema)
@@ -444,7 +442,7 @@ object EngineQueries {
           col("event_id").as("err_id"))
         .repartition(4).write.parquet(s"$work/errors")
       def stream(sub: String) = {
-        val schema = s.read.parquet(s"$work/$sub").schema
+        val schema = ParquetFooters.read(s, s"$work/$sub").schema
         s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$work/$sub")
       }
@@ -454,8 +452,8 @@ object EngineQueries {
       // count the two dirs separately: one read over both only works
       // because count() is column-independent across their differing
       // schemas — a fragile accident, not a contract (ADVICE r13)
-      val nStaged = s.read.parquet(s"$work/clicks").count() +
-        s.read.parquet(s"$work/errors").count()
+      val nStaged = ParquetFooters.read(s, s"$work/clicks").count() +
+        ParquetFooters.read(s, s"$work/errors").count()
       graft.core.ScopedConf.withShufflePartitions(
         s, graft.streaming.StreamScale.width(nStaged)) {
         graft.streaming.StreamJoins.intervalJoin(
@@ -506,7 +504,7 @@ object EngineQueries {
       // stateful width from the measured staged volume (StreamScale):
       // the complete-mode aggregate commits one sketch-holding state
       // store per partition per micro-batch
-      val nStaged = s.read.parquet(s"$work/stage").count()
+      val nStaged = ParquetFooters.read(s, s"$work/stage").count()
       graft.core.ScopedConf.withShufflePartitions(
         s, graft.streaming.StreamScale.width(nStaged)) {
         val stream = s.readStream.schema(ev.schema)
@@ -567,7 +565,7 @@ object EngineQueries {
       // stateful width from the measured staged volume (StreamScale):
       // transformWithState commits one RocksDB store per partition per
       // micro-batch
-      val nStaged = s.read.parquet(s"$work/stage").count()
+      val nStaged = ParquetFooters.read(s, s"$work/stage").count()
       val leaderboard = graft.core.ScopedConf.withShufflePartitions(
         s, graft.streaming.StreamScale.width(nStaged)) {
         val stream = s.readStream.schema(o.schema)
@@ -675,7 +673,7 @@ object EngineQueries {
       // transformWithState commits one RocksDB store per partition per
       // micro-batch; the batch warm-start standing rides inside the
       // scope (it seeds the same stores)
-      val nStaged = s.read.parquet(s"$work/stage").count()
+      val nStaged = ParquetFooters.read(s, s"$work/stage").count()
       val leaderboard = graft.core.ScopedConf.withShufflePartitions(
         s, graft.streaming.StreamScale.width(nStaged)) {
         val stream = s.readStream.schema(streamed.schema)
@@ -767,7 +765,7 @@ object EngineQueries {
       // micro-batch, and this replay runs one micro-batch PER SPAN
       val sessions = graft.core.ScopedConf.withShufflePartitions(
         s, graft.streaming.StreamScale.width(
-          s.read.parquet(s"$work/stage").count())) {
+          ParquetFooters.read(s, s"$work/stage").count())) {
         val stream = s.readStream
           .schema(staged.drop("chunk").schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$work/stage")
@@ -835,8 +833,7 @@ object EngineQueries {
           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
           JOIN part ON l_partkey = p_partkey
           GROUP BY 1, 2) a) b
-      GROUP BY user_id ORDER BY user_id"""),
-    bench = true)
+      GROUP BY user_id ORDER BY user_id"""))
 
   // ---------------------------------------------------------------- q90
   /** Listening time with the 180 s default-length constant: the length
@@ -933,8 +930,7 @@ object EngineQueries {
       SELECT tb.cust, tb.brand, ft.pk, ft.last_ship
       FROM top_brands tb JOIN fresh_top ft USING (brand)
       ANTI JOIN owned o ON tb.cust = o.cust AND ft.pk = o.pk
-      ORDER BY cust, brand, pk"""),
-    bench = true)
+      ORDER BY cust, brand, pk"""))
 
   // ---------------------------------------------------------------- q122
   /** Fresh-releases FULL parameter surface (fresh_releases.py:44-123):
@@ -1099,8 +1095,7 @@ object EngineQueries {
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         JOIN part ON l_partkey = p_partkey) t
       GROUP BY user_id, year, artist_name_key, artist_mbid, artist_name
-      ORDER BY user_id, year, artist_name_key"""),
-    bench = true)
+      ORDER BY user_id, year, artist_name_key"""))
 
   // ---------------------------------------------------------------- q129
   /** Bucketed-materialization round-trip: orders written bucketBy(custkey)

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.api.Messages
-import graft.core.Tables
+import graft.core.{ParquetFooters, Tables}
 import graft.ingest.{FileIngest, JdbcCache, MlhdImport}
 
 /** Driver-oracled round-trips for the ingestion + emission surfaces that
@@ -118,7 +118,7 @@ object IngestQueries {
         StructField("user_id", LongType),
         StructField("event_type", StringType)))
       FileIngest.csvToParquet(s, s"$work/in", s"$work/out", schema)
-      s.read.parquet(s"$work/out")
+      ParquetFooters.read(s, s"$work/out")
         .groupBy(regexp_extract(col("source_file"), "(g[01])\\.tsv", 1)
           .as("src"))
         .agg(count(lit(1)).as("n"), sum(col("user_id")).as("sum_user"),

@@ -67,8 +67,7 @@ object MiscQueries {
           ORDER BY count(*) DESC, l_partkey) AS rank
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       GROUP BY l_suppkey, l_partkey) t
-      WHERE rank <= 3 ORDER BY l_suppkey, rank"""),
-    bench = true)
+      WHERE rank <= 3 ORDER BY l_suppkey, rank"""))
 
   // ---------------------------------------------------------------- q78
   /** Country rollup — the artist-map shape (listeners per country via the

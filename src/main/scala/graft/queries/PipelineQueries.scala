@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{ParquetFooters, Tables}
 import graft.dedup.{Clusters, MinHash, SimHash}
 import graft.multimodal.Media
 import graft.recs.Als
@@ -92,8 +92,7 @@ object PipelineQueries {
       SELECT id_a, id_b, i / (sa.sz + sb.sz - i) AS jaccard
       FROM inter JOIN sizes sa ON id_a = sa.doc_id
       JOIN sizes sb ON id_b = sb.doc_id
-      WHERE i / (sa.sz + sb.sz - i) >= 0.3 ORDER BY id_a, id_b"""),
-    bench = true)
+      WHERE i / (sa.sz + sb.sz - i) >= 0.3 ORDER BY id_a, id_b"""))
 
   // ---------------------------------------------------------------- q47
   /** SimHash near-dup pairs via pigeonhole blocking, over the
@@ -403,8 +402,7 @@ object PipelineQueries {
       FROM dots
       JOIN norms n1 ON u1 = n1.u JOIN norms n2 ON u2 = n2.u
       WHERE dot / sqrt(cast(n1.norm2 * n2.norm2 AS double)) >= 0.9
-      ORDER BY u1, u2"""),
-    bench = true)
+      ORDER BY u1, u2"""))
 
   // ---------------------------------------------------------------- q125
   /** DIMSUM similarity plumbing, differentially oracled — and the
@@ -558,7 +556,7 @@ object PipelineQueries {
           "doc_id", numPerms = 32, bands = 8)
         .write.parquet(s"$work/index")
       MinHash.incrementalNearDuplicates(
-          batch, corpus, s.read.parquet(s"$work/index"),
+          batch, corpus, ParquetFooters.read(s, s"$work/index"),
           "doc_id", "text", shingleLen = 3, numPerms = 32, bands = 8,
           threshold = 0.3)
         .orderBy(col("id_a"), col("id_b"))

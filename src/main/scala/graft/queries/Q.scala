@@ -9,7 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * @param oracle equivalent DuckDB SQL over the same parquet tables; None for
   *               ops not expressible in portable SQL (driver then records a
   *               weaker rows-only check)
-  * @param bench  include in the headline Bench set
   * @param verifyOnly this query is a declared VERIFICATION form — a
   *               deliberately unbounded/quadratic formulation that exists
   *               to differentially gate a production operator (e.g. q125's
@@ -24,7 +23,6 @@ final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    bench: Boolean = false,
     verifyOnly: Boolean = false)
 
 object Q {

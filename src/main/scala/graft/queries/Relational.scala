@@ -48,8 +48,7 @@ object Relational {
       count(*) AS count_order
       FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
       GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus"""),
-    bench = true)
+      ORDER BY l_returnflag, l_linestatus"""))
 
   // ---------------------------------------------------------------- q2
   /** Projection + rename + filter (P1/P2); pushdown visible in the scan. */
@@ -154,8 +153,7 @@ object Relational {
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       JOIN customer ON o_custkey = c_custkey
       JOIN nation ON c_nationkey = n_nationkey
-      GROUP BY n_name ORDER BY n_name"""),
-    bench = true)
+      GROUP BY n_name ORDER BY n_name"""))
 
   // ---------------------------------------------------------------- q8
   /** Left outer join to an aggregate (J2): customers keep rows with zero
@@ -260,8 +258,7 @@ object Relational {
       count(*) AS n_pairs
       FROM lineitem a JOIN lineitem b
       ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 ORDER BY flag_a, flag_b"""),
-    bench = true)
+      GROUP BY 1, 2 ORDER BY flag_a, flag_b"""))
 
   // ---------------------------------------------------------------- q13
   /** Cross-join densification (J8): user × event-type grid with zero-filled

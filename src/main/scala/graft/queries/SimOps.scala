@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{ParquetFooters, Tables}
 import graft.functions.GraftFunctions
 
 /** Embedding similarity search over `embeddings` (64-dim float vectors):
@@ -73,8 +73,7 @@ object SimOps {
           PARTITION BY qid ORDER BY cos DESC, vid) AS rank
         FROM scored)
       SELECT qid, rank, vid, round(cos, 6) AS cos_r FROM ranked
-      WHERE rank <= 5 ORDER BY qid, rank"""),
-    bench = true)
+      WHERE rank <= 5 ORDER BY qid, rank"""))
 
   // ---------------------------------------------------------------- q51
   /** IVF-style ANN: 16 fixed centroids (lowest vec_ids — a deterministic
@@ -178,8 +177,7 @@ object SimOps {
         round(${sqlCosine("a.v", "b.v")}, 6) AS cos_r
       FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
       WHERE ${sqlCosine("a.v", "b.v")} >= 0.25
-      ORDER BY id_a, id_b"""),
-    bench = true)
+      ORDER BY id_a, id_b"""))
 
   // ---------------------------------------------------------------- q127
   /** LSH-bucketed ANN — the signed-random-projection alternative to q51's
@@ -454,7 +452,7 @@ object SimOps {
       // probes (fresh queries) against the stored index
       val probes = AnnIndex.indexRows(e.filter(col("vec_id") < 8),
         "vec_id", "embedding", planes)
-      AnnIndex.topK(s.read.parquet(s"$work/index"), probes, k = 5)
+      AnnIndex.topK(ParquetFooters.read(s, s"$work/index"), probes, k = 5)
         .orderBy(col("qid"), col("rank"))
     },
     Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v

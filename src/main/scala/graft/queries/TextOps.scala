@@ -271,8 +271,7 @@ object TextOps {
         SELECT * FROM deduped WHERE lang = 'en' AND doc_id % 10 < 7)
       SELECT source, count(*) AS n_docs,
         cast(sum(n_tokens) AS bigint) AS total_tokens
-      FROM sampled GROUP BY source ORDER BY source"""),
-    bench = true)
+      FROM sampled GROUP BY source ORDER BY source"""))
 
   // ---------------------------------------------------------------- q118
   /** BPE-style regex tokenization (the GPT-2 pre-tokenizer's class split,

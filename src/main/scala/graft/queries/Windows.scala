@@ -34,8 +34,7 @@ object Windows {
     Some("""SELECT p_brand, rn, p_partkey, p_retailprice FROM (
       SELECT p_brand, p_partkey, p_retailprice, row_number() OVER (
         PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS rn
-      FROM part) t WHERE rn <= 3 ORDER BY p_brand, rn"""),
-    bench = true)
+      FROM part) t WHERE rn <= 3 ORDER BY p_brand, rn"""))
 
   // ---------------------------------------------------------------- q24
   /** W2: rank() with ties kept (the "instructive limit" similarity
@@ -165,8 +164,7 @@ object Windows {
                 PARTITION BY user_id ORDER BY ts, event_id)
               > 1800 * 1000000 THEN 1 ELSE 0 END AS new_sess
             FROM events) a) b GROUP BY 1, 2) c
-      GROUP BY user_id ORDER BY user_id"""),
-    bench = true)
+      GROUP BY user_id ORDER BY user_id"""))
 
   // ---------------------------------------------------------------- q29
   /** W8: percent-of-total via SUM over whole partition — top-genres share

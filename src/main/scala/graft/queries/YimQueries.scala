@@ -78,8 +78,7 @@ object MusicQueries {
         list_sort(list(struct_pack(tag := tag, tag_count := tag_count,
           ppm := ppm))),
         x -> x.tag || '=' || x.tag_count || '=' || x.ppm), '|') AS tags
-      FROM pct GROUP BY recording_mbid ORDER BY recording_mbid"""),
-    bench = true)
+      FROM pct GROUP BY recording_mbid ORDER BY recording_mbid"""))
 
   // ---------------------------------------------------------------- q96
   /** YIM top genres (top_genres.py:29-62): three-source priority union —
@@ -406,8 +405,7 @@ object MusicQueries {
           PARTITION BY user_id ORDER BY sim DESC, other_user_id) AS rn
         FROM sym)
       SELECT user_id, other_user_id, sim AS similarity
-      FROM ranked WHERE rn <= 5 ORDER BY user_id, other_user_id"""),
-    bench = true)
+      FROM ranked WHERE rn <= 5 ORDER BY user_id, other_user_id"""))
 
   // ---------------------------------------------------------------- q102
   /** cf recording discovery (discovery.py:17-25): latest listen timestamp

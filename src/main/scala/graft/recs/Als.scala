@@ -4,6 +4,7 @@ import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetFooters
 
 /** Collaborative-filtering recommendation pipeline (the reference's
   * cf.recommendations.recording.* family re-expressed Spark-first):
@@ -289,7 +290,7 @@ object ModelLedger {
   }
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetFooters.read(spark, path)
 
   /** Build a ledger entry from a grid-search winner and its training set. */
   def entryFor(

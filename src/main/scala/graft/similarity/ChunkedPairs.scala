@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.ParquetFooters
 
 /** Out-of-core shared-item pair aggregation — the reference's MLHD
   * chunking (similarity/recording/common.py:190-213: aggregate per
@@ -129,7 +130,7 @@ object ChunkedPairs {
       // only the (eager) chunk jobs above
       spark.sql(
         s"DROP TABLE IF EXISTS ${graft.core.Bucketing.quoted(tbl)}")
-      spark.read.parquet(paths: _*)
+      ParquetFooters.read(spark, paths: _*)
     }
   }
 

@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.ParquetFooters
 
 /** Bucket-partitioned, segment-logged co-occurrence pair state — the
   * storage layout that makes [[Cooccurrence]]'s incremental maintenance
@@ -102,14 +103,14 @@ final class PairState private (
     * held at most ONE outstanding segment when it read them). The
     * union width is bounded by the compaction interval. */
   private def readSegs(segs: Seq[String]): DataFrame =
-    segs.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    segs.map(ParquetFooters.read(spark, _)).reduce(_ unionByName _)
 
   /** Merged pair counts `(item_a, item_b, users_both)`. With no
     * outstanding segments this is the base scan itself (no aggregate);
     * with segments it is base ∪ segments through one key-partitioned
     * sum — segment volume is bounded by the compaction threshold. */
   def pairs(): DataFrame = {
-    val base = spark.read.parquet(s"$path/base").drop("pk")
+    val base = ParquetFooters.read(spark, s"$path/base").drop("pk")
     val segs = segDirs()
     if (segs.isEmpty) base
     else base.unionByName(readSegs(segs).drop("pk"))
@@ -118,7 +119,7 @@ final class PairState private (
   }
 
   /** The distinct (item, user) presence set backing the counts. */
-  def presence(): DataFrame = spark.read.parquet(s"$path/presence")
+  def presence(): DataFrame = ParquetFooters.read(spark, s"$path/presence")
 
   /** Row count of the compacted base (from the metadata file — no
     * scan). Excludes outstanding segment rows. */
@@ -242,7 +243,7 @@ final class PairState private (
       spark.sessionState.conf.numShufflePartitions,
       math.min(4096L, carried / 2000000L).toInt)
     val basePath = s"$path/base"
-    val touchedBase = spark.read.parquet(basePath)
+    val touchedBase = ParquetFooters.read(spark, basePath)
       .filter(col("pk").isin(touched.map(Long.box): _*))
     // The fold STREAMS into a scratch dir — the base stays read-only
     // for the whole job, so nothing needs pinning (a pinned fold of a
@@ -324,7 +325,8 @@ final class PairState private (
     val segRows = if (remaining.isEmpty) 0L
       else readSegs(remaining).count()
     writeMeta(Meta(buckets,
-      baseRows = spark.read.parquet(basePath).count(), segRows = segRows))
+      baseRows = ParquetFooters.read(spark, basePath).count(),
+      segRows = segRows))
     fs.delete(markerPath, false)
     fs.delete(hp(tmp), true)
   }
@@ -403,7 +405,7 @@ object PairState {
       .write.option("parquet.block.size", RowGroupBytes)
       .partitionBy("pk").parquet(s"$path/base")
     graft.core.Pin.unpin(pres)
-    val baseRows = spark.read.parquet(s"$path/base").count()
+    val baseRows = ParquetFooters.read(spark, s"$path/base").count()
     require(baseRows > 0,
       "PairState.create needs a corpus with at least one co-present pair")
     st.writeMeta(Meta(buckets, baseRows, 0L))

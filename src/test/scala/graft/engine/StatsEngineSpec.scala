@@ -116,4 +116,39 @@ class StatsEngineSpec extends SparkSpec {
       ts("2024-01-01 00:00:00"), ts("2024-03-01 00:00:00"))
     assert(sortedRows(again) == sortedRows(out))
   }
+
+  test("a cached partial is recomputed after deletions are imported") {
+    val store = new ListenStore(spark, tmpDir("listen-store"))
+    store.writeBase(listensDf(Seq(
+      listen(1, "A", "2024-01-05 10:00:00", msid = "m1"),
+      listen(1, "A", "2024-01-06 10:00:00", msid = "m2"),
+      listen(2, "B", "2024-02-10 10:00:00", msid = "m3",
+        created = "2024-02-10 10:00:00"))))
+    val provider = TopEntityStats("user_id", Seq("artist_name"), top = 5)
+    val (from, to) = (ts("2024-01-01 00:00:00"), ts("2024-03-01 00:00:00"))
+    val engine = new IncrementalStatsEngine(spark, tmpDir("engine-work"))
+    def answers(e: IncrementalStatsEngine) =
+      sortedRows(e.run("top_artists", provider, store, from, to))
+    def fresh() =
+      answers(new IncrementalStatsEngine(spark, tmpDir("engine-fresh")))
+    def total(user: Int): Long =
+      engine.run("top_artists", provider, store, from, to)
+        .filter(col("user_id") === user).head().getAs[Long]("total_count")
+    assert(total(1) == 2) // caches the partial
+
+    // a deletion inside the cached window
+    store.appendDeleted(listensDf(Seq(
+      listen(1, "A", "2024-01-06 10:00:00", msid = "m2")))
+      .select(Listen.deletionKey.map(col): _*))
+    assert(answers(engine) == fresh())
+    assert(total(1) == 1)
+
+    // a whole-user history truncation, written by overwrite
+    import spark.implicits._
+    store.writeDeletedUserHistory(Seq((2, ts("2024-03-01 00:00:00")))
+      .toDF("user_id", "max_created"))
+    assert(answers(engine) == fresh())
+    assert(engine.run("top_artists", provider, store, from, to)
+      .filter(col("user_id") === 2).isEmpty)
+  }
 }
