@@ -3,7 +3,7 @@ package graft.core
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, GlobFilter, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{
@@ -11,34 +11,12 @@ import org.apache.spark.sql.execution.datasources.parquet.{
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
-/** The one module that opens parquet footers. Both of its jobs are
-  * driver-side metadata reads that launch no Spark job:
-  *
-  *   - [[read]]: every schemaless parquet read in the engine. Spark's own
-  *     `spark.read.parquet` infers a schema with a one-task job that
-  *     opens a single footer (58-78 ms of scheduling and driver round
-  *     trip per read, warm local[4] JVM on a 4-cpu host); this opens that
-  *     same footer on the driver (4-7 ms there) and hands the schema to
-  *     `spark.read.schema`.
-  *   - [[rowsIfFew]]: exact row counts of few-file landed trees.
-  *
-  * FEW FILES ONLY. Footer opens cost ~4-5 ms each even through the
-  * bounded pool below (parquet-hadoop footer deserialization + Hadoop
-  * conf access dominate, not I/O — measured round 14: 512 files
-  * ≈ 2.3 s driver-side while a distributed count() job over the same tree
-  * is ~0.2 s, its footer reads 32-way parallel through the scheduler).
-  * [[read]] opens exactly one footer per call; callers of [[rowsIfFew]]
-  * bound the file count and fall back to a count job above it. q230
-  * regressed 27 → 47 s when round 14 first pointed PairState's
-  * bookkeeping counts (wide tasks × pk-dirs dynamic-partition trees) at
-  * footer counts — reverted to count jobs there.
-  *
-  * ADVICE r13 (PairState.compact) context: sizing pinned width from file
-  * BYTES guesses the serialized-row expansion of a compressed columnar
-  * file; footer ROWS would feed the width formula exactly, but only when
-  * the tree is narrow enough for driver reads — compact's segment trees
-  * are not, so that site uses the conservative bytes-based width
-  * instead. */
+/** The one module that opens parquet footers: [[read]], every
+  * schemaless parquet read in the engine. Spark's own `spark.read.parquet`
+  * infers a schema with a one-task job that opens a single footer (58-78
+  * ms of scheduling and driver round trip per read, warm local[4] JVM on
+  * a 4-cpu host); [[read]] opens that same footer on the driver (4-7 ms
+  * there) and hands the schema to `spark.read.schema`. */
 object ParquetFooters {
 
   /** `spark.read.parquet(paths: _*)` with the schema read on the driver.
@@ -71,20 +49,6 @@ object ParquetFooters {
         reader.schema(footerSchema(f, hadoopConf, conf)).parquet(paths: _*)
       case None => reader.parquet(paths: _*)
     }
-  }
-
-  /** Footer row counts summed over every `*.parquet` file under `dirs`
-    * (recursive; empty or file-less dirs count 0 — the schema'd-read
-    * convention for empty state, StateTable.stage scaladoc), or −1 when
-    * the tree holds more than `maxFiles` of them — the caller then falls
-    * back to a distributed count. Keeps the driver-side path structurally
-    * unable to hit the wide-tree stall documented above. */
-  def rowsIfFew(
-      spark: SparkSession, dirs: Seq[String], maxFiles: Int): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = leafFiles(conf, dirs, None)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-    if (files.size > maxFiles) -1L else sumFooters(files, conf)
   }
 
   /** Data files under `paths` as Spark's file index lists them: globs
@@ -132,27 +96,5 @@ object ParquetFooters {
       ParquetMetadataConverter.SKIP_ROW_GROUPS)
     ParquetFileFormat.readSchemaFromFooter(
       new Footer(f.getPath, meta), new ParquetToSparkSchemaConverter(conf))
-  }
-
-  private def sumFooters(files: Seq[FileStatus], conf: Configuration): Long =
-    if (files.isEmpty) 0L
-    else if (files.size == 1) readRows(files.head, conf)
-    else {
-      val threads = math.min(32, files.size)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks: java.util.List[java.util.concurrent.Callable[Long]] =
-          files.map { f =>
-            (() => readRows(f, conf)): java.util.concurrent.Callable[Long]
-          }.asJava
-        pool.invokeAll(tasks).asScala.map(_.get()).sum
-      } finally pool.shutdown()
-    }
-
-  private def readRows(f: FileStatus, conf: Configuration): Long = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-    try r.getRecordCount
-    finally r.close()
   }
 }

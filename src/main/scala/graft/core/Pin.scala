@@ -25,55 +25,6 @@ object Pin {
   def apply(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
 
-  /** [[apply]] with BOUNDED block sizes: pin, count (a cached scan),
-    * and when the average pinned partition exceeds ~2× `rowsPerTask`
-    * re-pin at the measured width — an exchange over the
-    * already-materialized blocks, never a recompute — releasing the
-    * original. Why giant pinned blocks are a hazard even though
-    * MEMORY_AND_DISK_SER spills cleanly: on RE-READ of a disk-spilled
-    * block, BlockManager re-caches the whole partition as ONE
-    * ByteBuffer allocation (maybeCacheDiskBytesInMemory) — the q191
-    * 100× failure was 32 session-width blocks of 100+ MB re-cached
-    * concurrently under memory pressure, a heap OOM no spill can save.
-    * `keys` sets the layout of the re-pin (empty = round-robin). */
-  def atWidth(
-      df: DataFrame, keys: Seq[org.apache.spark.sql.Column],
-      rowsPerTask: Long = 500000L): DataFrame = {
-    // The FIRST pin must already be block-bounded — the count that
-    // would size it comes only after materialization, and a
-    // session-width first pin of a 100M-row frame is itself the giant-
-    // block hazard (the eager checkpoint's own re-read OOMs before any
-    // re-pin can happen: 32 concurrent 100+ MB ByteBuffer re-caches are
-    // humongous G1 allocations). A generous fixed over-width is safe in
-    // both directions: small frames get small extra tasks (sub-second),
-    // big frames get sane blocks, and the measured re-pin below still
-    // handles frames big enough to beat the safety factor.
-    val spark = df.sparkSession
-    val default = spark.sessionState.conf.numShufflePartitions
-    val first = math.max(default * 16, 256)
-    val p0 = apply(
-      if (keys.isEmpty) df.repartition(first)
-      else df.repartition(first, keys: _*))
-    val n = p0.count()
-    val parts = math.max(1, p0.rdd.getNumPartitions)
-    // measured target; re-pin TOWARD it in either direction — fat
-    // blocks are the re-read hazard, but a small frame left at the
-    // safety width is just as bad the other way (a pinned scan's
-    // partitioning is not AQE-coalescible, so 512 tiny blocks turn
-    // every downstream stage into 512 tiny tasks × every pass —
-    // measured 6× on q191 at 1× before this clause)
-    val target = math.max(default.toLong,
-      math.min(4096L, (n + rowsPerTask - 1) / rowsPerTask)).toInt
-    if (parts <= 2 * target && n / parts <= 2L * rowsPerTask) p0
-    else {
-      val p1 = apply(
-        if (keys.isEmpty) p0.repartition(target)
-        else p0.repartition(target, keys: _*))
-      unpin(p0)
-      p1
-    }
-  }
-
   /** Drop a pinned frame's checkpoint blocks. ONLY for frames every
     * consumer is finished with — an iterative operator's round-R state
     * once round R+1 has MATERIALIZED (the new pin's lineage is

@@ -22,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * CoalesceShufflePartitions, which re-fuses partitions toward the
   * 64 MB advisory target, and the pin then stores those re-fused
   * (possibly 100+ MB) blocks — the giant-block re-read hazard
-  * Pin.atWidth documents (measured: PairState.compact at 30×, 190
+  * StateTable.pinAt documents (measured: PairState.compact at 30×, 190
   * requested → ~32 × 195 MB pinned). When the body's result is pinned
   * and the carried volume is large, put the width on an EXPLICIT
   * `repartition(width, groupKeys…)` instead — user-specified

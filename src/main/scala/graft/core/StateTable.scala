@@ -1,7 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Disk-backed placement for corpus-sized operator state — the shared
   * form of the gate [[graft.operators.RandomWalks]] proved in round 12.
@@ -22,17 +22,26 @@ import org.apache.spark.sql.functions.col
   * OOMed its pinned form (zero executor deaths).
   *
   * Two shapes, matching what the consumer needs:
-  *   - [[bucketed]] — a hash-bucketed, bucket-sorted catalog table, for
-  *     state an iterative operator re-JOINS or re-GROUPS on the bucket
-  *     key every round (adjacency lists, peel state): every key-aligned
-  *     consumer gets an exchange-free, sort-free scan side — disk-backed
-  *     parity with the `repartition(width, key).sortWithinPartitions`
-  *     layout the pinned form preserves.
-  *   - [[stage]] — a plain parquet dir with 16 MB row groups
-  *     (OPERATIONS.md §2: re-read state keeps reader buffers small),
-  *     for state whose consumers shuffle on non-layout keys anyway
+  *   - [[bucketedAtWidth]] — a hash-bucketed, bucket-sorted catalog
+  *     table, for state an iterative operator re-JOINS or re-GROUPS on
+  *     the bucket key every round (adjacency lists, peel state): every
+  *     key-aligned consumer gets an exchange-free, sort-free scan side —
+  *     disk-backed parity with the `repartition(width, key)` layout the
+  *     pinned form ([[pinAt]]) preserves.
+  *   - [[stageAt]] — a plain parquet dir with 16 MB row groups, for
+  *     state whose consumers shuffle on non-layout keys anyway
   *     (candidate pairs, frontier steps, canonical edge sets): bucketing
   *     would buy no exchange, so it skips the catalog entirely.
+  *     [[pinOrStage]] gates between it and a pin by the staged rows.
+  *
+  * Row counts: every placement here counts its rows in the job that
+  * materializes it — a `Dataset.observe` count directly under the
+  * parquet write, the eager pin or the bucketed `saveAsTable`
+  * ([[counted]]) — so `Placed.rows` and `Tabled.rows` cost no job of
+  * their own and never re-read what was just written. The observe node
+  * sits below the sink and above any repartition, i.e. in the job's
+  * result stage, where Spark merges each partition's accumulator update
+  * exactly once even when a task is retried.
   *
   * Paths live under [[TempWork]] — on a real cluster that root is the
   * orchestrator-owned distributed workDir (TempWork's caveat); catalog
@@ -70,12 +79,14 @@ object StateTable {
       spark.sessionState.conf.numShufflePartitions,
       math.min(4096L, (rows + rowsPerTask - 1) / rowsPerTask).toInt)
 
-  /** A bucketed state table and its cleanup. `drop()` only when every
+  /** A bucketed state table, its row count (counted by the write job,
+    * see [[counted]]) and its cleanup. `drop()` only when every
     * consumer is finished — eagerly for superseded round state (the
     * [[Pin.unpin]] discipline, applied to catalog entries: without it a
     * long session accumulates one catalog registration + parquet tree
     * per invocation). */
-  final case class Tabled(df: DataFrame, table: String, path: String) {
+  final case class Tabled(
+      df: DataFrame, table: String, path: String, rows: Long) {
     def drop(): Unit = {
       df.sparkSession.sql(s"DROP TABLE IF EXISTS ${Bucketing.quoted(table)}")
       TempWork.delete(path)
@@ -83,124 +94,128 @@ object StateTable {
   }
 
   /** Materialize `df` as a hash-bucketed, bucket-sorted parquet table on
-    * `keys`, bucket count sized from the measured `rows`. The
+    * `keys` with `width` buckets (a caller-measured count). The
     * pre-repartition on the bucket keys at the bucket count aligns
     * writer tasks with buckets (one file per bucket, not one per
     * task×bucket). */
-  def bucketed(
-      df: DataFrame, keys: Seq[String], rows: Long, prefix: String,
-      rowsPerTask: Long = 500000L): Tabled =
-    bucketedAtWidth(
-      df, keys, measuredWidth(df.sparkSession, rows, rowsPerTask), prefix)
-
-  /** [[bucketed]] at a caller-measured bucket count. */
   def bucketedAtWidth(
       df: DataFrame, keys: Seq[String], width: Int,
       prefix: String): Tabled = {
     val spark = df.sparkSession
     val path = TempWork.dir(s"graft-$prefix")
     val tbl = tableName(spark, prefix)
-    ScopedConf.withShufflePartitions(spark, width) {
-      Bucketing.writeBucketed(
-        df.repartition(width, keys.map(col): _*),
-        s"$path/t", tbl, width, keys)
+    val (_, n) = ScopedConf.withShufflePartitions(spark, width) {
+      counted(df.repartition(width, keys.map(col): _*))(
+        Bucketing.writeBucketed(_, s"$path/t", tbl, width, keys))
     }
-    Tabled(Bucketing.read(spark, tbl), tbl, path)
+    Tabled(Bucketing.read(spark, tbl), tbl, path, n)
   }
 
-  /** Land `df` as plain parquet under a fresh [[TempWork]] dir and
-    * return the schema'd scan (schema'd: a file-less dir — an empty
-    * frontier step, a candidate-free batch — must read back as an empty
-    * frame, not error; the PairState empty-segment lesson). */
-  def stage(df: DataFrame, prefix: String): DataFrame =
-    stageAt(df, s"${TempWork.dir(s"graft-$prefix")}/s")
-
-  /** A placed state frame, its release, and its MEASURED row count
-    * (exact — from the placement's own staging footers or pinned-block
-    * count; callers that need the cardinality for width formulas must
-    * read it from here instead of launching another count job; −1 when
-    * the constructor did not measure, e.g. an operator wrapping its own
-    * round state). `release()` only when every consumer is finished:
-    * it unpins the pinned form or deletes the staged tree — either way
-    * the blocks/files are gone, so a released frame must never be
-    * scanned again. */
-  final case class Placed(
-      df: DataFrame, release: () => Unit, rows: Long = -1L)
+  /** A placed state frame, its release, and its row count — exact,
+    * counted by the job that materialized the placement (see
+    * [[counted]]), so callers that need the cardinality for width
+    * formulas read it from here instead of launching a count job.
+    * `release()` only when every consumer is finished: it unpins the
+    * pinned form or deletes the staged tree — either way the
+    * blocks/files are gone, so a released frame must never be scanned
+    * again. */
+  final case class Placed(df: DataFrame, release: () => Unit, rows: Long)
 
   /** The size-gated placement primitive, ONE plan execution total:
-    * land `df` to a parquet stage, read the row count from the parquet
-    * FOOTERS (driver-side metadata, zero jobs — [[ParquetFooters]]),
+    * land `df` to a parquet stage, counting its rows in the write job,
     * then place — below `gateRows`, re-pin from the stage at the
     * measured width on `keys` and delete the stage (executor storage,
-    * fastest re-reads — the [[Pin.atWidth]] contract without its
-    * second count); at or above, keep the staged scan (local disk;
-    * executor storage holds nothing).
+    * fastest re-reads — [[pinAt]]); at or above, keep the staged scan
+    * (local disk; executor storage holds nothing).
     *
-    * Why stage-first instead of count-then-decide: the count would
+    * Why stage-first instead of count-then-decide: a count job would
     * execute `df`'s plan once EXTRA (for a pair-join-derived edge set,
     * that doubles the dominant upstream join); staging executes it
-    * exactly once and the placement decision reads only footers. The
-    * stage write runs under a generous fixed over-width (the
-    * Pin.atWidth first-pin rationale: bounds per-task frames on
-    * arbitrarily large inputs; AQE re-fuses small volumes back down,
-    * which is safe here because the stage is never pinned).
+    * exactly once. The stage write runs under a generous fixed
+    * over-width: the row count that would size it exists only after
+    * the write, and a session-width write of a 100M-row frame is a
+    * per-task memory cliff; small frames pay only small extra tasks,
+    * and AQE re-fuses small volumes back down, which is safe here
+    * because the stage is never pinned.
     *
     * `upperBoundRows` ≥ 0 short-circuits the stage round-trip when a
-    * caller can PROVE the frame small from metadata it already holds
-    * (an input scan's footer rows bounding a join's output, a
-    * pre-distinct parent count): below the gate by proof, the frame
-    * pins directly at the bound's measured width — one exchange, one
-    * pin, no disk round-trip (VERDICT r13: the stage write+read is the
-    * placement's whole cost on a sync-slow volume, and it buys nothing
-    * when the answer is known to be "pin"). The bound must be SOUND —
-    * an under-estimate would block-pin a corpus-sized frame, the exact
-    * 4 GiB-tier OOM class the gate exists for — so callers pass it
-    * only when it is a true upper bound. At or above the gate the
-    * bound is ignored and the staging path runs unchanged. */
+    * caller can PROVE the frame small from what it already holds (an
+    * exact count of a 1:1 image of the frame): below the gate by proof,
+    * the frame pins directly at the bound's measured width — one
+    * exchange, one pin, no disk round-trip (VERDICT r13: the stage
+    * write+read is the placement's whole cost on a sync-slow volume,
+    * and it buys nothing when the answer is known to be "pin"). The
+    * bound must be SOUND — an under-estimate would block-pin a
+    * corpus-sized frame, the exact 4 GiB-tier OOM class the gate exists
+    * for — so callers pass it only when it is a true upper bound. At or
+    * above the gate the bound is ignored and the staging path runs
+    * unchanged. */
   def pinOrStage(
       df: DataFrame, keys: Seq[org.apache.spark.sql.Column],
       prefix: String, gateRows: Long = DefaultGateRows,
       rowsPerTask: Long = 500000L, upperBoundRows: Long = -1L): Placed = {
     val spark = df.sparkSession
-    if (upperBoundRows >= 0 && upperBoundRows < gateRows) {
-      // width from the bound: true rows ≤ bound < gate, so per-task
-      // frames stay bounded; below the gate the measured width is the
-      // session width anyway (gate/rowsPerTask ≈ session cores), so a
-      // loose-but-sound bound cannot over- or under-width the pin
-      val width = measuredWidth(spark, upperBoundRows, rowsPerTask)
-      val p = Pin(
-        if (keys.isEmpty) df.repartition(width)
-        else df.repartition(width, keys: _*))
-      val n = p.count() // cached-block scan — the plan ran once, in Pin
-      return Placed(p, () => Pin.unpin(p), n)
-    }
+    // width from the bound: true rows ≤ bound < gate, so per-task frames
+    // stay bounded; below the gate the measured width is the session
+    // width anyway (gate/rowsPerTask ≈ session cores), so a
+    // loose-but-sound bound cannot over- or under-width the pin
+    if (upperBoundRows >= 0 && upperBoundRows < gateRows)
+      return pinAt(df, keys, measuredWidth(spark, upperBoundRows, rowsPerTask))
     val dir = TempWork.dir(s"graft-$prefix")
     val first = math.max(
       spark.sessionState.conf.numShufflePartitions * 16, 256)
-    val scan = ScopedConf.withShufflePartitions(spark, first) {
-      stageAt(df, s"$dir/s")
+    val (scan, n) = ScopedConf.withShufflePartitions(spark, first) {
+      counted(df)(stageAt(_, s"$dir/s"))
     }
-    // driver-side footer count only while the stage is few-file (AQE
-    // coalesces small volumes; a corpus-sized stage can be hundreds of
-    // files, where a distributed count is faster — ParquetFooters
-    // scaladoc)
-    val metaN = ParquetFooters.rowsIfFew(spark, Seq(s"$dir/s"), 64)
-    val n = if (metaN >= 0) metaN else scan.count()
     if (n < gateRows) {
-      val width = measuredWidth(spark, n, rowsPerTask)
-      val p = Pin(
-        if (keys.isEmpty) scan.repartition(width)
-        else scan.repartition(width, keys: _*))
+      val p = pinAt(scan, keys, measuredWidth(spark, n, rowsPerTask))
       // the pin is eager and lineage-truncated — the stage has no reader
       TempWork.delete(dir)
-      Placed(p, () => Pin.unpin(p), n)
+      p
     } else Placed(scan, () => TempWork.delete(dir), n)
   }
 
-  /** [[stage]] at a caller-managed path — for per-round/per-hop dirs
-    * whose lifecycle the operator owns (write hop t, delete hop t−1). */
+  /** Pin `df` repartitioned to `width` on `keys` (empty = round-robin),
+    * counting its rows in the pin's own job. The explicit repartition
+    * is what bounds the pinned blocks: a user-specified repartition is
+    * exempt from AQE coalescing, and on RE-READ of a disk-spilled block
+    * BlockManager re-caches the whole partition as ONE ByteBuffer
+    * allocation — the q191 100× failure was 32 session-width blocks of
+    * 100+ MB re-cached concurrently under memory pressure, a heap OOM no
+    * spill can save. */
+  def pinAt(
+      df: DataFrame, keys: Seq[org.apache.spark.sql.Column],
+      width: Int): Placed = {
+    val (p, n) = counted(
+      if (keys.isEmpty) df.repartition(width)
+      else df.repartition(width, keys: _*))(Pin.apply)
+    Placed(p, () => Pin.unpin(p), n)
+  }
+
+  /** Land `df` as plain parquet (16 MB row groups — OPERATIONS.md §2:
+    * re-read state keeps reader buffers small) at a caller-managed path
+    * and return the schema'd scan (schema'd: a file-less dir — an empty
+    * frontier step, a candidate-free batch — must read back as an empty
+    * frame, not error; the PairState empty-segment lesson). For
+    * per-round/per-hop dirs whose lifecycle the operator owns (write hop
+    * t, delete hop t−1). */
   def stageAt(df: DataFrame, path: String): DataFrame = {
     df.write.option("parquet.block.size", 16L * 1024 * 1024).parquet(path)
     df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
+  /** Run `sink` — an action that materializes its argument: a parquet
+    * write, an eager pin, a bucketed `saveAsTable` — over `df` with a
+    * row count observed in the same job, and return the sink's result
+    * with the count. The observe node sits directly under the sink, so
+    * callers put any `repartition` into `df`: that keeps the node in
+    * the job's RESULT stage, where Spark applies a task's accumulator
+    * updates once per partition even when the task is retried (a
+    * shuffle-map stage can re-run and count twice). The count is read
+    * only after the sink has returned. */
+  private def counted[T](df: DataFrame)(sink: DataFrame => T): (T, Long) = {
+    val o = new Observation()
+    val out = sink(df.observe(o, count(lit(1)).as("rows")))
+    (out, o.get("rows").asInstanceOf[Long])
   }
 }

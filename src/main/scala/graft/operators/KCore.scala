@@ -104,9 +104,8 @@ object KCore {
     var e = graft.core.StateTable.pinOrStage(
       und.unionByName(und.select(col("b").as("a"), col("a").as("b"))),
       Seq(col("a")), "kcore", gateRows = tableStateRows)
-    // the initial count is the placement's own measurement; per-round
-    // counts are over already-materialized frames — a cached scan below
-    // the gate, a parquet metadata count above; edge count unchanged ⟺
+    // every round's edge count is its placement's own measurement (the
+    // pin or table write counts what it lands); edge count unchanged ⟺
     // the round's keep filter dropped nobody ⟺ fixpoint (0 edges is
     // trivially one too)
     var prev = e.rows
@@ -133,13 +132,9 @@ object KCore {
         if (tabledRound) {
           val t = graft.core.StateTable.bucketedAtWidth(
             survivors, Seq("a"), nextWidth, "kcore_round")
-          graft.core.StateTable.Placed(t.df, () => t.drop())
-        } else {
-          val p = survivors.repartition(nextWidth, col("a"))
-            .transform(graft.core.Pin.apply)
-          graft.core.StateTable.Placed(p, () => graft.core.Pin.unpin(p))
-        }
-      val c = next.df.count()
+          graft.core.StateTable.Placed(t.df, () => t.drop(), t.rows)
+        } else graft.core.StateTable.pinAt(survivors, Seq(col("a")), nextWidth)
+      val c = next.rows
       // next is materialized (pin or table) — the superseded round
       // state releases NOW instead of accumulating one edge copy per
       // round (Pin.unpin scaladoc: the q220 100× execution-starvation

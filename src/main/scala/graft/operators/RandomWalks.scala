@@ -102,9 +102,7 @@ object RandomWalks {
     // slower (disk round-trips it didn't need), never wrong (the two
     // regimes are spec-pinned output-identical).
     val n = edges.count()
-    val width = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      math.min(4096L, (n + rowsPerTask - 1) / rowsPerTask).toInt)
+    val width = graft.core.StateTable.measuredWidth(spark, n, rowsPerTask)
     if (n >= tableStateRows)
       return walksTabled(edges, srcCol, dstCol, walksPerNode, length, width)
     val adj = graft.core.ScopedConf.withShufflePartitions(spark, width) {

@@ -124,8 +124,7 @@ object Triangles {
     val sampled = graft.core.StateTable.pinOrStage(
       c.filter(coin.isin(keep: _*)), Seq(col("a"), col("b")),
       "tri_doulion", gateRows = tableStateRows)
-    trianglesOfCanonical(sampled.df, maxBloomEdges,
-        knownRows = sampled.rows)
+    trianglesOfCanonical(sampled.df, sampled.rows, maxBloomEdges)
       .agg(count(lit(1)).as("sampled_triangles"))
       .select(col("sampled_triangles"),
         (col("sampled_triangles") * lit(f * f * f))
@@ -146,16 +145,16 @@ object Triangles {
     // placement (pin below the gate, local-disk stage above; see
     // materializeCanonical)
     val cP = materializeCanonical(edges, src, dst, tableStateRows)
-    trianglesOfCanonical(cP.df, maxBloomEdges, knownRows = cP.rows)
+    trianglesOfCanonical(cP.df, cP.rows, maxBloomEdges)
   }
 
-  /** [[triangles]] over an ALREADY-canonical, already-pinned `(a, b)`
-    * edge set — the entry point for callers that run several counting
-    * passes over the same graph (q217 computes the exact count AND the
-    * sampled estimate side by side): re-pinning the canonical set per
-    * pass would hold one extra materialized edge copy per consumer,
-    * which at 30× is the difference between fitting the default probe
-    * heap and not.
+  /** [[triangles]] over an ALREADY-canonical, already-placed `(a, b)`
+    * edge set of `m` rows (the placement's `rows`) — the entry point
+    * for callers that run several counting passes over the same graph
+    * (q217 computes the exact count AND the sampled estimate side by
+    * side): re-pinning the canonical set per pass would hold one extra
+    * materialized edge copy per consumer, which at 30× is the difference
+    * between fitting the default probe heap and not.
     *
     * EAGER in the chunked regime: when the measured wedge volume
     * exceeds the per-job budget, this call runs the whole out-of-core
@@ -165,21 +164,15 @@ object Triangles {
     * contract). Callers must build the frame ONCE and reuse it;
     * constructing it twice redoes and double-stores the full close. */
   def trianglesOfCanonical(
-      c: DataFrame, maxBloomEdges: Long = 4000000L,
-      rowsPerTask: Long = 500000L, knownRows: Long = -1L): DataFrame = {
+      c: DataFrame, m: Long, maxBloomEdges: Long = 4000000L,
+      rowsPerTask: Long = 500000L): DataFrame = {
     val spark = c.sparkSession
     // measured widths (the Bfs/LabelPropagation discipline, applied here
     // after the round-10 100× probe OOM'd the fixed session width on the
-    // wedge join): edge-scale exchanges size from the counted edge set;
-    // the wedge join + close size from the measured wedge volume
+    // wedge join): edge-scale exchanges size from the placed edge count
+    // `m`; the wedge join + close size from the measured wedge volume
     // Σ d_out·(d_out−1)/2 over the ORIENTED degrees — the same number
     // ChunkedPairs budgets by, computed from one cheap aggregate.
-    // `knownRows` carries the placement's measured count in (the
-    // StateTable.Placed contract) so the edge set is never re-counted.
-    val m = if (knownRows >= 0) knownRows else c.count()
-    val edgeWidth = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      math.min(4096L, (m + rowsPerTask - 1) / rowsPerTask).toInt)
     // The oriented set is materialized ONCE, size-gated: its two
     // consumers (the wedge-terms aggregate and the wedge self-join)
     // each re-ran orient's two joins + degree aggregate when it stayed
@@ -204,8 +197,8 @@ object Triangles {
         .head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    val wedgeWidth = math.max(edgeWidth,
-      math.min(4096L, (wedgeTerms + rowsPerTask - 1) / rowsPerTask).toInt)
+    val wedgeWidth = graft.core.StateTable.measuredWidth(
+      spark, math.max(m, wedgeTerms), rowsPerTask)
     // Out-of-core regime (round-10 100×, measured 4.1B wedges over
     // 119.6M edges): ONE exchange carrying the whole wedge volume is
     // tens of GB of shuffle write plus an equal sort on the read side —
@@ -236,10 +229,8 @@ object Triangles {
       // deleting it halves the chunked regime's peak disk footprint)
       oP.release()
       val oAll = ParquetFooters.read(spark, s"$dir/oriented")
-      val chunkWidth = math.max(
-        spark.sessionState.conf.numShufflePartitions,
-        math.min(4096L,
-          (wedgeTerms / nChunks + rowsPerTask - 1) / rowsPerTask).toInt)
+      val chunkWidth = graft.core.StateTable.measuredWidth(
+        spark, wedgeTerms / nChunks, rowsPerTask)
       (0 until nChunks).foreach { i =>
         trianglesWedgeClose(
             c, oAll.filter(col("ck") === i).drop("ck"),

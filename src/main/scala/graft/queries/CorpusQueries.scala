@@ -639,8 +639,8 @@ object CorpusQueries {
     * population mean), and the Horvitz–Thompson population-count
     * estimate `Σ mult·W/(m·w)` lands within a pinned band of the true
     * count (measured ratio 1.025 at sf0.01 / 0.942 at sf0.1, ProbePps
-    * 2026-08-15; band ±25%). Every boolean is deterministic for fixed
-    * data and salt. */
+    * of commit ee39c87, 2026-08-15; band ±25%). Every boolean is
+    * deterministic for fixed data and salt. */
   val q278PpsFast = Q(
     "q278_pps_fast",
     (s, d) => {

@@ -767,7 +767,7 @@ object MiscQueries {
       // materialized edge copy instead of re-pinning per consumer, and
       // the placement's measured count rides along (no re-count job)
       val exact = graft.operators.Triangles
-        .trianglesOfCanonical(e, knownRows = eP.rows)
+        .trianglesOfCanonical(e, eP.rows)
         .agg(count(lit(1)).as("exact_triangles"))
       val est = graft.operators.Triangles.doulion(e, "a", "b",
         keepHex = 8)

@@ -268,7 +268,8 @@ object PipelineQueries {
     * 5:1 randomSplit, RMSE metric): split bookkeeping exact, realized
     * fraction inside a wide binomial band, validation RMSE under a
     * DATA-DERIVED bound: the zero predictor's RMSE on the same validation
-    * rows, times 1.05. Measured (ProbeAls, 2026-08-15): 0.889 at sf0.001,
+    * rows, times 1.05. Measured (ProbeAls of commit ee39c87,
+    * 2026-08-15): 0.889 at sf0.001,
     * 0.957 at sf0.01, 0.995 at sf0.1 — labels are capped playcounts ≈1 on
     * this near-one-purchase-per-pair corpus, so the zero predictor scores
     * ≈1.0, the measured trend rises TOWARD it but not past it, and a
@@ -477,7 +478,8 @@ object PipelineQueries {
     * that sub-population and extrapolates by uniformity of the mod-7
     * cut (id-independent of play behavior), not by covering every pair.
     * Zadeh & Carlson's published bound concentrates entries with true
-    * cosine ≥ τ; measured (ProbeDimsum 2026-08-15): recall 1.0 and max
+    * cosine ≥ τ; measured (ProbeDimsum of commit ee39c87, 2026-08-15):
+    * recall 1.0 and max
     * relative error ≤ 4.9e-6 at sf0.001/0.01/0.1 — at this τ the
     * oversampling γ makes every inclusion probability 1, so the answer
     * is deterministically near-exact and the pinned bands (recall ≥

@@ -864,16 +864,9 @@ object MusicQueries {
       // base create, both batch applies) — materialize it once with
       // size-gated placement instead of re-running lineitem ⋈ orders per
       // leg (guide §1.2: don't recompute what you already have; pinned
-      // below the gate, local-disk stage at corpus scale). The join's
-      // row count is EXACTLY lineitem's (inner join on the orders
-      // primary key), and lineitem's footer rows are free — a sound
-      // upper bound that lets the below-gate case pin directly, no
-      // stage round-trip (pinOrStage upperBoundRows contract; −1 when
-      // the input tree is too wide for driver footer reads)
+      // below the gate, local-disk stage at corpus scale)
       val evP = graft.core.StateTable.pinOrStage(
-        listens(s, d), Seq.empty, "q230_listens",
-        upperBoundRows = graft.core.ParquetFooters.rowsIfFew(
-          s, Seq(s"$d/lineitem.parquet"), 64))
+        listens(s, d), Seq.empty, "q230_listens")
       val ev = evP.df
       // a user-id split would put whole users on one side; splitting on
       // recording id makes users straddle the cut, so batch rows

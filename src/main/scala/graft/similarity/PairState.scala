@@ -158,9 +158,9 @@ final class PairState private (
       .agg(count(lit(1)).cast("long").as("users_both"))
       .withColumn("pk", pkOf)
     // The delta is NOT pinned: its one expensive consumer is the
-    // segment write, and the row count comes from the landed parquet's
-    // footers afterwards. A session-width pin here is the giant-block
-    // re-read hazard Pin.atWidth documents — at 30× the pinned delta's
+    // segment write, and the row count comes from the landed parquet
+    // afterwards. A session-width pin here is the giant-block re-read
+    // hazard StateTable.pinAt documents — at 30× the pinned delta's
     // 32 ~195 MB blocks OOMed the segment write's sort when
     // BlockManager re-cached them as whole ByteBuffers concurrently.
     val segPath = s"$path/seg/s${segDirs().size}"
@@ -169,8 +169,8 @@ final class PairState private (
     // explicit schema: a no-pair batch lands only a _SUCCESS marker,
     // which schema inference rejects. A distributed count, NOT driver
     // footers: the segment is a tasks×pk-dirs dynamic-partition tree
-    // (ParquetFooters scaladoc — driver footer opens measured ~4.5 ms
-    // each; the count job reads the same footers 32-way parallel)
+    // (driver footer opens measured ~4.5 ms each in round 14; the count
+    // job reads the same footers 32-way parallel)
     val nSeg = spark.read.schema(delta.schema).parquet(segPath).count()
     // a fully-replayed batch creates no pairs — drop the segment (an
     // empty partitioned write leaves a file-less dir that poisons
@@ -199,8 +199,8 @@ final class PairState private (
     repair() // finish any half-done prior swap before folding anew
     val segs = segDirs()
     if (segs.isEmpty) return
-    // ONE pin at a BYTES-measured width: Pin.atWidth's generous fixed
-    // first-width (≥512 tasks) exists for frames whose size is unknown
+    // ONE pin at a BYTES-measured width: pinOrStage's generous fixed
+    // stage width (≥256 tasks) exists for frames whose size is unknown
     // before materialization, but a segment log IS parquet — its file
     // bytes are free from the driver's listing — so the width can be
     // exact up front. bytes/2 MB is the CONSERVATIVE expansion factor
@@ -210,14 +210,13 @@ final class PairState private (
     // back in the 100+ MB giant-block re-read territory; at /2 MB even
     // a 16× expansion stays ≤ 32 MB per block, and the cost of
     // over-width is a few extra small tasks. (Exact footer ROWS were
-    // tried first — ParquetFooters scaladoc: driver footer opens are
-    // ~4.5 ms/file, a +2.3 s driver stall per compact on a 512-file
-    // segment tree, strictly worse than the width imprecision.) This
-    // keeps atWidth's 512-task exchange, its count job, and its
-    // conditional re-pin all dropped (measured ~5-8 s of the q230
-    // lifecycle on the round-13 box — OPTIMIZATION_r13.md). Round-robin:
-    // hashing on pk alone would fold the pin into ≤buckets non-empty
-    // blocks.
+    // tried first — driver footer opens are ~4.5 ms/file, a +2.3 s
+    // driver stall per compact on a 512-file segment tree, strictly
+    // worse than the width imprecision.) This keeps a 512-task exchange,
+    // a count job and a conditional re-pin all dropped (measured ~5-8 s
+    // of the q230 lifecycle on the round-13 box — OPTIMIZATION_r13.md).
+    // Round-robin: hashing on pk alone would fold the pin into
+    // ≤buckets non-empty blocks.
     val segBytes = segs
       .map(p => fs.getContentSummary(hp(p)).getLength).sum
     val segWidth = math.max(

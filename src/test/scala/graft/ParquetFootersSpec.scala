@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import graft.core.{ParquetFooters, Tables}
 import graft.engine.{IncrementalStatsEngine, ListenStore, TopEntityStats}
@@ -19,33 +16,6 @@ class ParquetFootersSpec extends SparkSpec {
     val spark0 = spark.read.parquet(paths: _*)
     assert(ours.schema === spark0.schema, paths.mkString(","))
     assert(rows(ours) === rows(spark0), paths.mkString(","))
-  }
-
-  /** Jobs started by `body` on this thread. A marker job follows it: the
-    * listener bus delivers events in order, so once the marker's start is
-    * seen, every job `body` started has been seen too. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    val group = s"footers-${java.util.UUID.randomUUID}"
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains(s"$group-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains(s"$group-marker"), "marker job never seen")
-      groups.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("every sf0.001 table reads with the schema and rows spark infers") {

@@ -117,6 +117,57 @@ class StateTableSpec extends SparkSpec {
         java.nio.file.Paths.get(f.stripPrefix("file:")))))
   }
 
+  test("pinOrStage's bound path runs the jobs of a bare repartition and " +
+    "pin: its row count costs no job") {
+    val df = (1L to 60L).map(i => (i, i % 5)).toDF("k", "v")
+    // gate 1000, bound 100: measuredWidth is the session width, 4
+    val bare = jobsDuring(
+      graft.core.Pin.unpin(graft.core.Pin(df.repartition(4, col("k")))))
+    var placed: StateTable.Placed = null
+    val bound = jobsDuring {
+      placed = StateTable.pinOrStage(df, Seq(col("k")), "sts_jobs",
+        gateRows = 1000L, upperBoundRows = 100L)
+    }
+    assert(bound === bare)
+    assert(placed.rows === 60L)
+    placed.release()
+  }
+
+  test("an empty input places with rows == 0 and reads back empty: " +
+    "pinned, staged and bucketed") {
+    val base = spark.range(1L, 31L)
+      .select(col("id").as("k"), (col("id") % 4L).as("v"))
+    val empties = Seq(
+      Seq.empty[(Long, Long)].toDF("k", "v"),
+      // empty only at run time: AQE replaces the join with an empty relation
+      base.join(base.filter(col("v") > 10L).select(col("k")), Seq("k")))
+    empties.foreach { df =>
+      val pinned = StateTable.pinOrStage(df, Seq(col("k")), "sts_empty_p",
+        gateRows = 1000L)
+      val staged = StateTable.pinOrStage(df, Seq(col("k")), "sts_empty_s",
+        gateRows = 0L)
+      assert(!staged.df.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+      val tabled = StateTable.bucketedAtWidth(df, Seq("k"), 4, "sts_empty_t")
+      assert(Seq(pinned.rows, staged.rows, tabled.rows) === Seq(0L, 0L, 0L))
+      assert(pinned.df.collect().isEmpty)
+      assert(staged.df.collect().isEmpty)
+      assert(tabled.df.collect().isEmpty)
+      pinned.release()
+      staged.release()
+      tabled.drop()
+    }
+  }
+
+  test("bucketedAtWidth reports the table's row count") {
+    val df = (1L to 200L).map(i => (i % 20, i)).toDF("g", "v")
+      .filter(col("v") % 3 =!= 0L)
+    val t = StateTable.bucketedAtWidth(df, Seq("g"), 4, "sts_tbl_rows")
+    assert(t.rows === df.count())
+    assert(t.df.count() === t.rows)
+    t.drop()
+  }
+
   private def udfTouch(acc: org.apache.spark.util.LongAccumulator) =
     udf { (_: Long) => acc.add(1L); true }
 }
