@@ -34,6 +34,9 @@ import org.apache.spark.sql.functions.{col, count, lit}
   *     would buy no exchange, so it skips the catalog entirely.
   *     [[pinOrStage]] gates between it and a pin by the staged rows.
   *
+  * Round-loop graph operators choose pinned or tabled ONCE per call
+  * with [[regime]] and run one loop over its two placements.
+  *
   * Row counts: every placement here counts its rows in the job that
   * materializes it — a `Dataset.observe` count directly under the
   * parquet write, the eager pin or the bucketed `saveAsTable`
@@ -161,18 +164,18 @@ object StateTable {
     // loose-but-sound bound cannot over- or under-width the pin
     if (upperBoundRows >= 0 && upperBoundRows < gateRows)
       return pinAt(df, keys, measuredWidth(spark, upperBoundRows, rowsPerTask))
-    val dir = TempWork.dir(s"graft-$prefix")
     val first = math.max(
       spark.sessionState.conf.numShufflePartitions * 16, 256)
-    val (scan, n) = ScopedConf.withShufflePartitions(spark, first) {
-      counted(df)(stageAt(_, s"$dir/s"))
+    val stage = ScopedConf.withShufflePartitions(spark, first) {
+      staged(df, prefix)
     }
-    if (n < gateRows) {
-      val p = pinAt(scan, keys, measuredWidth(spark, n, rowsPerTask))
+    if (stage.rows < gateRows) {
+      val p = pinAt(
+        stage.df, keys, measuredWidth(spark, stage.rows, rowsPerTask))
       // the pin is eager and lineage-truncated — the stage has no reader
-      TempWork.delete(dir)
+      stage.release()
       p
-    } else Placed(scan, () => TempWork.delete(dir), n)
+    } else stage
   }
 
   /** Pin `df` repartitioned to `width` on `keys` (empty = round-robin),
@@ -185,11 +188,70 @@ object StateTable {
     * spill can save. */
   def pinAt(
       df: DataFrame, keys: Seq[org.apache.spark.sql.Column],
-      width: Int): Placed = {
-    val (p, n) = counted(
+      width: Int): Placed =
+    pinned(
       if (keys.isEmpty) df.repartition(width)
-      else df.repartition(width, keys: _*))(Pin.apply)
+      else df.repartition(width, keys: _*))
+
+  /** Where one call of an iterative graph operator ([[graft.operators.Bfs]],
+    * [[graft.operators.TemporalBfs]], [[graft.operators.LabelPropagation]],
+    * [[graft.operators.RandomWalks]]) keeps its state, chosen by
+    * [[regime]]. Both calls return a [[Placed]], so the operator runs one
+    * round loop whatever the regime and releases superseded state with
+    * `release()`. Pinned (below the gate), every placement block-pins;
+    * tabled, the join side is a bucketed table and each round its own
+    * parquet dir, so executor storage holds nothing corpus-sized. The
+    * regimes are output-identical (each operator's spec pins them
+    * against each other). `width` is the join side's partition or
+    * bucket count and the shuffle width every round runs at. */
+  final case class Regime(tabled: Boolean, width: Int) {
+
+    /** The join side an operator re-reads every round, laid out on
+      * `key`. Pinned: hash-partitioned at `width` and sorted within
+      * partitions before the pin, so every pinned block is bounded.
+      * Tabled: the bucket-sorted [[bucketedAtWidth]] table, whose scans
+      * are exchange-free on `key`. */
+    def laidOut(df: DataFrame, key: String, prefix: String): Placed =
+      if (tabled) {
+        val t = bucketedAtWidth(df, Seq(key), width, prefix)
+        Placed(t.df, () => t.drop(), t.rows)
+      } else ScopedConf.withShufflePartitions(df.sparkSession, width) {
+        pinned(df.repartition(width, col(key)).sortWithinPartitions(col(key)))
+      }
+
+    /** One round's state, materialized at `width` (the placement is an
+      * action, so the scoped width is sound — [[ScopedConf]]): pinned,
+      * a [[Pin]]; tabled, a parquet dir of its own that `release()`
+      * deletes. Either way the result is lineage-truncated, so the
+      * previous round's placement can be released once this returns. */
+    def round(df: DataFrame, prefix: String): Placed =
+      ScopedConf.withShufflePartitions(df.sparkSession, width) {
+        if (tabled) staged(df, prefix) else pinned(df)
+      }
+  }
+
+  /** The regime for a call whose state is bounded by `rows`: tabled at
+    * or above `gateRows`, at the [[measuredWidth]] of `rows` either way.
+    * Callers pass an upper bound (a pre-distinct or 2× count): an
+    * over-estimate tables early and widens the exchanges — slower,
+    * never wrong. */
+  def regime(
+      spark: SparkSession, rows: Long, gateRows: Long,
+      rowsPerTask: Long): Regime =
+    Regime(rows >= gateRows, measuredWidth(spark, rows, rowsPerTask))
+
+  /** `df` pinned as is, its rows counted by the pin's own job. */
+  private def pinned(df: DataFrame): Placed = {
+    val (p, n) = counted(df)(Pin.apply)
     Placed(p, () => Pin.unpin(p), n)
+  }
+
+  /** `df` landed by [[stageAt]] in a fresh [[TempWork]] dir that
+    * `release()` deletes, its rows counted by the write job. */
+  private def staged(df: DataFrame, prefix: String): Placed = {
+    val dir = TempWork.dir(s"graft-$prefix")
+    val (scan, n) = counted(df)(stageAt(_, s"$dir/s"))
+    Placed(scan, () => TempWork.delete(dir), n)
   }
 
   /** Land `df` as plain parquet (16 MB row groups — OPERATIONS.md §2:

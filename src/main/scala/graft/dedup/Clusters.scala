@@ -73,9 +73,15 @@ object Clusters {
         .filter(col("n.comp") < col("o.comp"))
         .limit(1).count()
       converged = changed == 0L
+      // next is materialized with truncated lineage and the probe has
+      // run — the superseded labels have no reader (the KCore round
+      // discipline; Pin.unpin: the q220 100× failure)
+      graft.core.Pin.unpin(labels)
       labels = next
       iter += 1
     }
+    // the returned labels are lineage-truncated — nothing reads sym
+    graft.core.Pin.unpin(sym)
     require(converged,
       s"connectedComponents did not converge in $maxIter rounds — " +
         "component diameter exceeds the bound; raise maxIter or switch " +
@@ -158,6 +164,9 @@ object Clusters {
       val grew = next.exceptAll(e).limit(1).count() > 0
       val shrank = if (grew) true else e.exceptAll(next).limit(1).count() > 0
       converged = !grew && !shrank
+      // next is materialized and both probes have run — the superseded
+      // edge set has no reader
+      graft.core.Pin.unpin(e)
       e = next
       iter += 1
     }

@@ -28,18 +28,29 @@ import org.apache.spark.sql.functions._
   * CURRENT FRONTIER (not the visited set, not the corpus) against the
   * edge list, one distinct, one anti-join against the visited frame —
   * frontier-proportional work, the textbook distributed BFS. The edge
-  * list pins once; visited/frontier pin per round so lineage stays
-  * flat. No driver-side adjacency ever materializes.
+  * list is placed once and each hop's frontier as it lands, so lineage
+  * stays flat. No driver-side adjacency ever materializes.
   */
 object Bfs {
 
   /** `(node, dist)` for every node within `maxHops` of `seeds`.
     *
-    * Per-hop shuffle width is sized from the measured input edge count
-    * and the adjacency is hash-partitioned + sorted once before the
-    * pin (the [[LabelPropagation]]/[[TemporalBfs]] discipline — the
-    * 100× probe OOM'd the fixed session width on the frontier⋈edges
-    * hop exactly as q272 did).
+    * Placement and width come from ONE measured count, the directed-edge
+    * upper bound 2 × input rows ([[graft.core.StateTable.regime]]): the
+    * per-hop shuffle width is its measured width (the 100× probe OOM'd
+    * the fixed session width on the frontier⋈edges hop exactly as q272
+    * did), and below `tableStateRows` the adjacency pins hash-partitioned
+    * and sorted on the join key while each hop's `(node, dist)` frontier
+    * pins; at or above it the adjacency becomes an `a`-bucketed parquet
+    * table (each hop join gets an exchange-free scan side) and each hop
+    * lands in its own parquet dir — executor storage
+    * holds nothing corpus-sized. The visited set is the union of the
+    * landed hops, which is also the answer, so no hop is ever re-landed;
+    * the adjacency is released once the last hop lands. Over-estimating
+    * the count tables early: slower, never wrong (BfsSpec pins the
+    * regimes output-identical). Tabled state lives under
+    * [[graft.core.TempWork]] (its local-mode-stand-in caveat applies on
+    * a real cluster).
     *
     * @param edges   edge list; direction is ignored (undirected walk),
     *                self-loops are harmless
@@ -55,105 +66,29 @@ object Bfs {
     require(maxHops >= 0 && maxHops <= 64,
       s"maxHops must be in [0,64], got $maxHops")
     require(rowsPerTask >= 1, s"rowsPerTask must be >= 1, got $rowsPerTask")
-    val spark = edges.sparkSession
     val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-    // upper bound on the directed-edge count — over-estimating only
-    // widens the exchange, which AQE coalesces. The SAME count gates
-    // adjacency/frontier placement (the StateTable pin class): below
-    // the gate everything block-pins as before; at or above, the
-    // adjacency becomes an `a`-bucketed parquet table (each hop join
-    // still gets an exchange-free, sort-free scan side) and each
-    // frontier streams through its own parquet dir — executor storage
-    // holds nothing corpus-sized. Over-estimation tables early: slower,
-    // never wrong (the regimes are spec-pinned output-identical).
-    val n2 = 2L * e0.count()
-    val width = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      ((n2 + rowsPerTask - 1) / rowsPerTask).toInt)
-    if (n2 >= tableStateRows)
-      return distancesTabled(spark, e0, seeds, maxHops, width)
-    val e = graft.core.ScopedConf.withShufflePartitions(spark, width) {
+    val regime = graft.core.StateTable.regime(
+      edges.sparkSession, 2L * e0.count(), tableStateRows, rowsPerTask)
+    val adj = regime.laidOut(
       e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-        .distinct()
-        .repartition(width, col("a"))
-        .sortWithinPartitions(col("a"))
-        .transform(graft.core.Pin.apply)
-    }
-    var visited = seeds.toDF("node").distinct()
-      .withColumn("dist", lit(0L))
-      .transform(graft.core.Pin.apply) // consumed by join + union each hop
-    var frontier = visited.select(col("node"))
+        .distinct(),
+      "a", "bfs_adj")
+    // newest hop first; the head is the frontier
+    var hops = List(regime.round(
+      seeds.toDF("node").distinct().withColumn("dist", lit(0L)), "bfs"))
     var hop = 0L
-    var done = frontier.isEmpty
-    while (hop < maxHops && !done) {
+    while (hop < maxHops && hops.head.rows > 0L) {
       hop += 1L
-      val next = graft.core.ScopedConf.withShufflePartitions(spark, width) {
-        frontier.join(e, col("node") === col("a"))
+      val visited = hops.map(_.df.select(col("node"))).reduce(_ unionByName _)
+      hops = regime.round(
+        hops.head.df.join(adj.df, col("node") === col("a"))
           .select(col("b").as("node")).distinct()
-          .join(visited.select(col("node")), Seq("node"), "left_anti")
-          .transform(graft.core.Pin.apply)
-      }
-      val nv = visited
-        .unionByName(next.withColumn("dist", lit(hop)))
-        .transform(graft.core.Pin.apply)
-      // nv and next are materialized with truncated lineage — the
-      // superseded visited pin and the PREVIOUS hop's frontier pin
-      // (its rows live in nv) release NOW instead of accumulating one
-      // frontier copy per hop (the KCore round discipline; unpin is a
-      // no-op on hop 1's derived frontier)
-      graft.core.Pin.unpin(visited)
-      graft.core.Pin.unpin(frontier)
-      visited = nv
-      frontier = next
-      done = next.isEmpty
+          .join(visited, Seq("node"), "left_anti")
+          .withColumn("dist", lit(hop)),
+        "bfs") :: hops
     }
-    visited
-  }
-
-  /** The ≥`tableStateRows` regime of [[distances]]: the adjacency as an
-    * `a`-bucketed parquet table (exchange-free, sort-free hop-join scan
-    * side — the [[RandomWalks]] tabled-walk layout), each hop's
-    * `(node, dist)` frontier as its own parquet dir, the visited set as
-    * the lazy union of the landed hops. Output-identical to the pinned
-    * form (BfsSpec pins the regimes against each other); executor
-    * storage holds nothing. State lives under [[graft.core.TempWork]]
-    * (its local-mode-stand-in caveat applies on a real cluster). */
-  private def distancesTabled(
-      spark: org.apache.spark.sql.SparkSession, e0: DataFrame,
-      seeds: DataFrame, maxHops: Int, width: Int): DataFrame = {
-    val adj = graft.core.ScopedConf.withShufflePartitions(spark, width) {
-      graft.core.StateTable.bucketedAtWidth(
-        e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-          .distinct(),
-        Seq("a"), width, "bfs_adj")
-    }
-    val work = graft.core.TempWork.dir("graft-bfs")
-    val hop0 = graft.core.StateTable.stageAt(
-      seeds.toDF("node").distinct().withColumn("dist", lit(0L)),
-      s"$work/h0")
-    var hops = List(hop0)
-    var frontier = hop0.select(col("node"))
-    var hop = 0L
-    var done = frontier.isEmpty
-    while (hop < maxHops && !done) {
-      hop += 1L
-      val visited = hops.map(_.select(col("node")))
-        .reduce(_ unionByName _)
-      val next = graft.core.ScopedConf.withShufflePartitions(spark, width) {
-        graft.core.StateTable.stageAt(
-          frontier.join(adj.df, col("node") === col("a"))
-            .select(col("b").as("node")).distinct()
-            .join(visited, Seq("node"), "left_anti")
-            .withColumn("dist", lit(hop)),
-          s"$work/h$hop")
-      }
-      hops = next :: hops
-      frontier = next.select(col("node"))
-      done = next.isEmpty
-    }
-    // every hop has landed and the returned frame reads only the hop
-    // dirs — drop the adjacency table (catalog + corpus-sized files) NOW
-    adj.drop()
-    hops.reverse.reduce(_ unionByName _)
+    // every hop has landed and the answer reads only the hops
+    adj.release()
+    hops.reverse.map(_.df).reduce(_ unionByName _)
   }
 }

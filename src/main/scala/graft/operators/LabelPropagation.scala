@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * adjacency on the neighbour key) and TWO map-side-combinable
   * aggregates ((node, label) counts, then per-node argmax via
   * max(struct)) — the [[MassRank]] iteration shape; the symmetrized
-  * adjacency is pinned once, labels re-pin per round so lineage stays
-  * O(1). No window functions: the argmax is an aggregate, so no
+  * adjacency is placed once, labels land once per round so lineage
+  * stays O(1). No window functions: the argmax is an aggregate, so no
   * per-node sort materializes.
   */
 object LabelPropagation {
@@ -40,16 +40,27 @@ object LabelPropagation {
     * numeric (the engine's graph discipline) — the smallest-label
     * tie-break rides an integer negation inside `max(struct)`.
     *
-    * Per-round shuffle width is sized from the MEASURED directed-edge
-    * count (one cheap count on the pinned adjacency): ceil(edges /
-    * rowsPerTask) exchanges, never fewer than the session width. A
-    * fixed session width is the per-task memory cliff — at the 4 GiB
-    * production share on 30× data, width 4 put a 7.5M-row sort frame
-    * in each label-join task and OOM'd; the measured width bounds
-    * every task's join/aggregate frame by rowsPerTask regardless of
-    * graph size ([[graft.core.ScopedConf]]; each round ends in the
-    * eager Pin, so the scoped width is sound). AQE coalesces the
-    * small post-aggregate sides back down. */
+    * Placement and width come from ONE measured count, the directed
+    * edges of the deduplicated graph ([[graft.core.StateTable.regime]];
+    * the dedup runs twice — a scan-shuffle-count, far cheaper than
+    * holding an extra materialized copy across every round). The
+    * per-round shuffle width is its measured width — ceil(edges /
+    * rowsPerTask), clamped to [session width, 4096]. A fixed session
+    * width is the per-task memory cliff: at the 4 GiB production share
+    * on 30× data, width 4 put a 7.5M-row sort frame in each label-join
+    * task and OOM'd; the measured width bounds every task's
+    * join/aggregate frame by rowsPerTask regardless of graph size. AQE
+    * coalesces the small post-aggregate sides back down.
+    *
+    * The adjacency is laid out on the join key ONCE — below
+    * `tableStateRows` hash-partitioned and sorted within partitions,
+    * then pinned; at or above it an nbr-bucketed, bucket-sorted parquet
+    * table whose scans are exchange-free on `nbr`. Labels land once per
+    * round (a pin, or a parquet dir at or above the gate), the
+    * superseded round is released as soon as the next one lands, and
+    * the adjacency once the rounds end. The regimes are
+    * output-identical (LabelPropagationSpec pins them against each
+    * other). */
   def communities(
       edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int, rowsPerTask: Long = 500000L,
@@ -58,52 +69,28 @@ object LabelPropagation {
     require(rounds >= 1 && rounds <= 64,
       s"rounds must be in [1,64], got $rounds")
     require(rowsPerTask >= 1, s"rowsPerTask must be >= 1, got $rowsPerTask")
-    val spark = edges.sparkSession
     val ed = edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    // One cheap counting pass sizes the width BEFORE the adjacency is
-    // laid out (the dedup runs twice — a scan-shuffle-count, far
-    // cheaper than holding an extra materialized copy across every
-    // round). The SAME measured count gates state placement (the
-    // StateTable pin class): at or above the gate the adjacency becomes
-    // an nbr-bucketed parquet table and per-round labels stream through
-    // parquet dirs — executor storage holds nothing corpus-sized.
-    val n2 = 2L * ed.count()
-    val width = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      ((n2 + rowsPerTask - 1) / rowsPerTask).toInt)
-    if (n2 >= tableStateRows)
-      return communitiesTabled(spark, ed, rounds, width)
-    // THE memory move: hash-partition the adjacency on the join key
-    // and sort it within partitions ONCE, then pin. localCheckpoint
-    // preserves both the partitioning and the ordering, so every
-    // round's sort-merge join reads the adjacency side exchange-free
-    // AND sort-free — only the node-count-sized label frame shuffles
-    // per round. Without this, every round re-sorted the full edge
-    // list inside the join stage (a per-task sort frame of
-    // edges/width rows — the 4 GiB OOM at width 4).
-    val adj = ed.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(ed.select(col("b").as("node"), col("a").as("nbr")))
-      .repartition(width, col("nbr"))
-      .sortWithinPartitions(col("nbr"))
-      .transform(graft.core.Pin.apply)
-    var labels = adj.select(col("node")).distinct()
-      .withColumn("label", col("node"))
-      .transform(graft.core.Pin.apply)
+    val regime = graft.core.StateTable.regime(
+      edges.sparkSession, 2L * ed.count(), tableStateRows, rowsPerTask)
+    val adj = regime.laidOut(
+      ed.select(col("a").as("node"), col("b").as("nbr"))
+        .unionAll(ed.select(col("b").as("node"), col("a").as("nbr"))),
+      "nbr", "lpa_adj")
+    var labels = regime.round(
+      adj.df.select(col("node")).distinct().withColumn("label", col("node")),
+      "lpa")
     for (_ <- 1 to rounds) {
-      val next = graft.core.ScopedConf.withShufflePartitions(spark, width) {
-        lpaRound(adj, labels).transform(graft.core.Pin.apply)
-      }
-      // next is materialized with truncated lineage — release the
-      // superseded round's label pin NOW (the KCore round discipline)
-      // instead of accumulating one node-sized copy per round
-      graft.core.Pin.unpin(labels)
+      val next = regime.round(lpaRound(adj.df, labels.df), "lpa")
+      labels.release()
       labels = next
     }
-    labels
+    // the answer reads only the final round
+    adj.release()
+    labels.df
   }
 
   /** One synchronous LPA round: per-node neighbour-label argmax,
@@ -117,42 +104,5 @@ object LabelPropagation {
     nbrCounts.groupBy(col("node"))
       .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
       .select(col("node"), (-col("m.nl")).as("label"))
-  }
-
-  /** The ≥`tableStateRows` regime of [[communities]]: the adjacency as
-    * an nbr-bucketed, bucket-sorted parquet table (every round's join
-    * reads an exchange-free, sort-free scan side — disk-backed parity
-    * with the sorted pin), each round's labels in their own parquet
-    * dir, the superseded round's dir deleted as soon as the new one
-    * lands. Output-identical to the pinned form (LabelPropagationSpec
-    * pins the regimes against each other); executor storage holds
-    * nothing. State lives under [[graft.core.TempWork]] (its
-    * local-mode-stand-in caveat applies on a real cluster). */
-  private def communitiesTabled(
-      spark: org.apache.spark.sql.SparkSession, ed: DataFrame,
-      rounds: Int, width: Int): DataFrame = {
-    val adj = graft.core.ScopedConf.withShufflePartitions(spark, width) {
-      graft.core.StateTable.bucketedAtWidth(
-        ed.select(col("a").as("node"), col("b").as("nbr"))
-          .unionAll(ed.select(col("b").as("node"), col("a").as("nbr"))),
-        Seq("nbr"), width, "lpa_adj")
-    }
-    val work = graft.core.TempWork.dir("graft-lpa")
-    var labels = graft.core.StateTable.stageAt(
-      adj.df.select(col("node")).distinct()
-        .withColumn("label", col("node")),
-      s"$work/r0")
-    for (r <- 1 to rounds) {
-      val next = graft.core.ScopedConf.withShufflePartitions(spark, width) {
-        graft.core.StateTable.stageAt(lpaRound(adj.df, labels), s"$work/r$r")
-      }
-      // round r has landed — the superseded round's dir has no reader
-      graft.core.TempWork.delete(s"$work/r${r - 1}")
-      labels = next
-    }
-    // the returned frame reads only the final round's dir — drop the
-    // adjacency table (catalog + corpus-sized files) NOW
-    adj.drop()
-    labels
   }
 }

@@ -32,15 +32,25 @@ object TemporalBfs {
   /** `(node, arrival)` for every node temporally reachable within
     * `maxHops` edges; direction is ignored (undirected flow).
     *
-    * Per-round shuffle width is sized from the measured input edge
-    * count (the [[LabelPropagation]] discipline): the 100× probe
-    * showed the session width is the per-task memory cliff here — at
-    * width 32 each task of the frontier⋈edges round held a multi-
-    * million-row slice of the 100M-row directed adjacency (plus the
-    * pinned block it re-reads) and OOM'd an 8 GiB heap. The adjacency
-    * is hash-partitioned on the join key and sorted ONCE before the
-    * pin, so every round's join reads it exchange-free and sort-free;
-    * only the node-count-sized frontier/best frames shuffle per round.
+    * Placement and width come from ONE measured count, the directed-edge
+    * upper bound 2 × input rows ([[graft.core.StateTable.regime]]; the
+    * distinct can only shrink it, and an over-estimate only widens the
+    * exchange, which AQE coalesces). The per-round shuffle width is its
+    * measured width: the 100× probe showed the session width is the
+    * per-task memory cliff here — at width 32 each task of the
+    * frontier⋈edges round held a multi-million-row slice of the
+    * 100M-row directed adjacency (plus the pinned block it re-reads)
+    * and OOM'd an 8 GiB heap. Below `tableStateRows` the adjacency is
+    * hash-partitioned on the join key and sorted ONCE before its pin,
+    * and each round's merged `(node, arrival, improved)` frame pins; at
+    * or above it the adjacency is an `a`-bucketed, bucket-sorted parquet
+    * table (exchange-free round-join scans) and each round lands in its
+    * own parquet dir (a corpus-sized temporal edge pin is the same
+    * cluster-storage budget as the static families'). The superseded
+    * round is released as soon as the next one lands, and the
+    * adjacency once the loop ends.
+    * Over-estimation tables early: slower, never wrong (TemporalBfsSpec
+    * pins the regimes output-identical).
     *
     * @param ts    integer edge timestamp column (days/micros — any
     *              consistent unit)
@@ -55,55 +65,39 @@ object TemporalBfs {
     require(maxHops >= 0 && maxHops <= 64,
       s"maxHops must be in [0,64], got $maxHops")
     require(rowsPerTask >= 1, s"rowsPerTask must be >= 1, got $rowsPerTask")
-    val spark = edges.sparkSession
     val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
       col(ts).cast("long").as("ets"))
-    // upper bound on the directed-edge count (2 × input rows; the
-    // distinct can only shrink it) — one upstream pass, and an
-    // over-estimate only widens the exchange, which AQE coalesces. The
-    // SAME count gates state placement (the StateTable pin class — a
-    // corpus-sized temporal edge pin is the same cluster-storage budget
-    // as the static families'); over-estimation tables early: slower,
-    // never wrong (the regimes are spec-pinned output-identical).
-    val n2 = 2L * e0.count()
-    val width = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      ((n2 + rowsPerTask - 1) / rowsPerTask).toInt)
-    val seeds0 = seeds.toDF("node", "arrival")
-      .groupBy(col("node")).agg(min(col("arrival").cast("long"))
-        .as("arrival"))
-    if (n2 >= tableStateRows)
-      return earliestArrivalTabled(spark, e0, seeds0, maxHops, width)
-    val e = graft.core.ScopedConf.withShufflePartitions(spark, width) {
+    val regime = graft.core.StateTable.regime(
+      edges.sparkSession, 2L * e0.count(), tableStateRows, rowsPerTask)
+    val adj = regime.laidOut(
       e0.unionByName(
           e0.select(col("b").as("a"), col("a").as("b"), col("ets")))
-        .distinct()
-        .repartition(width, col("a"))
-        .sortWithinPartitions(col("a"))
-        .transform(graft.core.Pin.apply)
-    }
-    var best = seeds0.transform(graft.core.Pin.apply)
-    var prevPin = best
-    var frontier = best
+        .distinct(),
+      "a", "tbfs_adj")
+    // every seed starts improved: round 0's frontier is the seed set
+    var merged = regime.round(
+      seeds.toDF("node", "arrival")
+        .groupBy(col("node")).agg(min(col("arrival").cast("long"))
+          .as("arrival"))
+        .withColumn("improved", lit(true)),
+      "tbfs")
     var hop = 0
-    var done = frontier.isEmpty
+    var done = merged.rows == 0L
     while (hop < maxHops && !done) {
       hop += 1
-      val merged = graft.core.ScopedConf.withShufflePartitions(spark, width) {
-        round(e, frontier, best).transform(graft.core.Pin.apply)
-      }
-      // merged is materialized with truncated lineage; frontier and
-      // best are projections of the PREVIOUS round's pin — release it
-      // NOW (the KCore round discipline) instead of accumulating one
-      // node-sized copy per hop
-      graft.core.Pin.unpin(prevPin)
-      prevPin = merged
-      frontier = merged.filter(col("improved"))
-        .select(col("node"), col("arrival"))
-      best = merged.select(col("node"), col("arrival"))
-      done = frontier.isEmpty
+      val next = regime.round(
+        round(adj.df,
+          merged.df.filter(col("improved"))
+            .select(col("node"), col("arrival")),
+          merged.df.select(col("node"), col("arrival"))),
+        "tbfs")
+      merged.release()
+      merged = next
+      done = merged.df.filter(col("improved")).isEmpty
     }
-    best
+    // the answer reads only the final round
+    adj.release()
+    merged.df.select(col("node"), col("arrival"))
   }
 
   /** One label-correcting round: earliest candidate arrivals from the
@@ -123,50 +117,5 @@ object TemporalBfs {
         (col("arrival").isNull ||
           (col("cand").isNotNull && col("cand") < col("arrival")))
           .as("improved"))
-  }
-
-  /** The ≥`tableStateRows` regime of [[earliestArrival]]: the temporal
-    * adjacency as an `a`-bucketed, bucket-sorted parquet table
-    * (exchange-free, sort-free round-join scan side), each round's
-    * merged `(node, arrival, improved)` frame in its own parquet dir
-    * with the superseded round deleted as soon as the new one lands —
-    * the [[Bfs]]/[[LabelPropagation]] tabled layout; executor storage
-    * holds nothing. Output-identical to the pinned form (TemporalBfsSpec
-    * pins the regimes against each other); state lives under
-    * [[graft.core.TempWork]] (its local-mode-stand-in caveat applies on
-    * a real cluster). */
-  private def earliestArrivalTabled(
-      spark: org.apache.spark.sql.SparkSession, e0: DataFrame,
-      seeds0: DataFrame, maxHops: Int, width: Int): DataFrame = {
-    val adj = graft.core.ScopedConf.withShufflePartitions(spark, width) {
-      graft.core.StateTable.bucketedAtWidth(
-        e0.unionByName(
-            e0.select(col("b").as("a"), col("a").as("b"), col("ets")))
-          .distinct(),
-        Seq("a"), width, "tbfs_adj")
-    }
-    val work = graft.core.TempWork.dir("graft-tbfs")
-    var merged = graft.core.StateTable.stageAt(
-      seeds0.withColumn("improved", lit(true)), s"$work/m0")
-    var hop = 0
-    var done = merged.filter(col("improved")).isEmpty
-    while (hop < maxHops && !done) {
-      hop += 1
-      val frontier = merged.filter(col("improved"))
-        .select(col("node"), col("arrival"))
-      val best = merged.select(col("node"), col("arrival"))
-      val next = graft.core.ScopedConf.withShufflePartitions(spark, width) {
-        graft.core.StateTable.stageAt(
-          round(adj.df, frontier, best), s"$work/m$hop")
-      }
-      // round `hop` has landed — the superseded round's dir has no reader
-      graft.core.TempWork.delete(s"$work/m${hop - 1}")
-      merged = next
-      done = merged.filter(col("improved")).isEmpty
-    }
-    // the returned frame reads only the final round's dir — drop the
-    // adjacency table (catalog + corpus-sized files) NOW
-    adj.drop()
-    merged.select(col("node"), col("arrival"))
   }
 }

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Listen
 
@@ -36,6 +37,20 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The frame `call` returns, the ids of the RDDs the call left
+    * persisted, and the ids of the pinned RDDs the frame reads — the two
+    * sets are equal when the call released every pin its answer does
+    * not need. */
+  def pinsLeft(call: => DataFrame): (DataFrame, Set[Int], Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val df = call
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val read = df.queryExecution.analyzed.collect {
+      case l: LogicalRDD => l.rdd.id
+    }.toSet
+    (df, left, read)
+  }
 
   /** Jobs started by `body` on this thread. A marker job follows it: the
     * listener bus delivers events in order, so once the marker's start is

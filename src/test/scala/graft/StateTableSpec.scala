@@ -168,6 +168,28 @@ class StateTableSpec extends SparkSpec {
     t.drop()
   }
 
+  test("regime: one count sets the gate and the width, both regimes " +
+    "count what they place, and the tabled join side is bucketed") {
+    // gate 1000, 100 rows per task: 100 rows pin at the session width,
+    // 1000 rows table at ten buckets
+    val pinned = StateTable.regime(spark, 100L, 1000L, 100L)
+    val tabled = StateTable.regime(spark, 1000L, 1000L, 100L)
+    assert(!pinned.tabled && pinned.width === 4)
+    assert(tabled.tabled && tabled.width === 10)
+    val df = (1L to 200L).map(i => (i % 20, i)).toDF("g", "v")
+    Seq(pinned, tabled).foreach { r =>
+      val side = r.laidOut(df, "g", "sts_regime")
+      val step = r.round(df.filter(col("v") > 150L), "sts_regime")
+      assert(side.rows === 200L && step.rows === 50L)
+      assert(side.df.as[(Long, Long)].collect().toSet ===
+        df.as[(Long, Long)].collect().toSet)
+      if (r.tabled) assert(graft.core.Bucketing.isExchangeFree(
+        side.df.groupBy(col("g")).agg(sum(col("v")))))
+      side.release()
+      step.release()
+    }
+  }
+
   private def udfTouch(acc: org.apache.spark.util.LongAccumulator) =
     udf { (_: Long) => acc.add(1L); true }
 }

@@ -347,6 +347,19 @@ class DedupSpec extends SparkSpec {
     assert(keptB == Set(2L, 9L), s"min PRESENT member kept: $keptB")
   }
 
+  test("Clusters: each call leaves pinned only what its answer reads") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+    // label propagation: the final labels; star: the node set and the
+    // final edge set
+    val (_, propLeft, propRead) =
+      pinsLeft(Clusters.connectedComponents(pairs, "id_a", "id_b"))
+    assert(propRead.size == 1 && propLeft == propRead, s"$propLeft")
+    val (_, starLeft, starRead) =
+      pinsLeft(Clusters.connectedComponentsStar(pairs, "id_a", "id_b"))
+    assert(starRead.size == 2 && starLeft == starRead, s"$starLeft")
+  }
+
   test("Clusters: randomized graph matches in-test union-find") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
