@@ -2,8 +2,8 @@
 # Heavy-query probes under REAL executor JVMs: local-cluster[2,4,4096]
 # (two workers x 4 cores x 4096 MB), the round-10 real-serialization
 # tier. This is the adjudication harness for executor-memory machinery
-# (Pin.atWidth block math, out-of-core triangle close, KCore unpin,
-# MinHash verify widths) whose behavior local[n] structurally cannot
+# (StateTable.pin/regime block math, out-of-core triangle close, KCore
+# release, MinHash verify widths) whose behavior local[n] structurally cannot
 # test: real closure serialization, torrent broadcast, off-heap
 # exchange, per-executor storage/execution pools.
 #

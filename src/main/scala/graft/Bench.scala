@@ -55,7 +55,7 @@ object Bench {
         val scratchBefore = graft.core.TempWork.snapshot()
         val t = runOnce(name)
         // OUTSIDE the timed section: drop the blocks THIS query pinned
-        // (snapshot diff — core.Pin localCheckpoints have truncated
+        // (snapshot diff — StateTable.pin localCheckpoints have truncated
         // lineage, so a pin shared across queries must never be yanked
         // from under a later reader; today nothing is shared, but the
         // diff makes that an invariant, not an assumption). Without the

@@ -130,9 +130,9 @@ object BenchDispatch {
       "stats.entity.listeners", "popularity.popularity", "popularity.entity",
       "similarity.sessions", "troi.playlists")
     val incSlice = listens.filter(col("listened_at") > lit(pivot))
-      .limit(1000).transform(graft.core.Pin.apply)
+      .limit(1000).transform(graft.core.StateTable.pin)
     val delSlice = store.baseListens.limit(10)
-      .select(Listen.deletionKey.map(col): _*).transform(graft.core.Pin.apply)
+      .select(Listen.deletionKey.map(col): _*).transform(graft.core.StateTable.pin)
     // sample imports REPLACE the base store (full-import orchestration,
     // ledgered as sample) — a tiny sample here would starve every later
     // cf.*/stats name of data, so the sample payload is the full dump too

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * production share).
   *
   * Scoping is sound when the body ENDS IN AN ACTION (the engine's
-  * per-round [[Pin]] is one): exchanges take their width at plan time,
+  * per-round [[StateTable.pin]] is one): exchanges take their width at plan time,
   * the eager localCheckpoint materializes under the override, and the
   * restored conf cannot re-plan what is already checkpointed. Same
   * discipline as the events-read legacy flag (core/Tables.scala) —

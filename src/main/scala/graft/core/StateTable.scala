@@ -2,12 +2,15 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.storage.StorageLevel
 
-/** Disk-backed placement for corpus-sized operator state — the shared
-  * form of the gate [[graft.operators.RandomWalks]] proved in round 12.
+/** The engine's one placement module. Callers see gates, not
+  * mechanisms: [[pin]]/[[unpin]] for small multiply-consumed frames,
+  * [[pinOrStage]] for one size-gated placement, and [[regime]] for a
+  * round loop's pinned-or-tabled state.
   *
   * Why placement is a GATE and not a constant: a corpus-sized block pin
-  * ([[Pin]]) is a CLUSTER-STORAGE budget with a hard failure mode — the
+  * ([[pin]]) is a CLUSTER-STORAGE budget with a hard failure mode — the
   * round-12 100× probe under 2×4 GiB real executors died writing a
   * ~2 GiB-per-executor adjacency cache (storage at its cap, heap OOM,
   * executor death), and localCheckpoint blocks have no lineage, so the
@@ -21,7 +24,7 @@ import org.apache.spark.sql.functions.{col, count, lit}
   * q210's tabled form ran 288.5 s green on the exact 4 GiB tier that
   * OOMed its pinned form (zero executor deaths).
   *
-  * Two shapes, matching what the consumer needs:
+  * Two disk shapes behind the gates, matching what the consumer needs:
   *   - [[bucketedAtWidth]] — a hash-bucketed, bucket-sorted catalog
   *     table, for state an iterative operator re-JOINS or re-GROUPS on
   *     the bucket key every round (adjacency lists, peel state): every
@@ -34,17 +37,14 @@ import org.apache.spark.sql.functions.{col, count, lit}
   *     would buy no exchange, so it skips the catalog entirely.
   *     [[pinOrStage]] gates between it and a pin by the staged rows.
   *
-  * Round-loop graph operators choose pinned or tabled ONCE per call
-  * with [[regime]] and run one loop over its two placements.
-  *
   * Row counts: every placement here counts its rows in the job that
   * materializes it — a `Dataset.observe` count directly under the
   * parquet write, the eager pin or the bucketed `saveAsTable`
-  * ([[counted]]) — so `Placed.rows` and `Tabled.rows` cost no job of
-  * their own and never re-read what was just written. The observe node
-  * sits below the sink and above any repartition, i.e. in the job's
-  * result stage, where Spark merges each partition's accumulator update
-  * exactly once even when a task is retried.
+  * ([[counted]]) — so `Placed.rows` costs no job of its own and never
+  * re-reads what was just written. The observe node sits below the
+  * sink and above any repartition, i.e. in the job's result stage,
+  * where Spark merges each partition's accumulator update exactly once
+  * even when a task is retried.
   *
   * Paths live under [[TempWork]] — on a real cluster that root is the
   * orchestrator-owned distributed workDir (TempWork's caveat); catalog
@@ -61,6 +61,46 @@ object StateTable {
     * storage share. Operators expose it as a parameter so specs can
     * force the tabled regime on toy graphs. */
   val DefaultGateRows: Long = 16L * 1000 * 1000
+
+  /** Lineage-truncating materialization for multiply-consumed frames.
+    *
+    * Plain `df.localCheckpoint()` stores blocks DESERIALIZED
+    * (MEMORY_AND_DISK_DESER) — row objects, 3-5× the footprint of the
+    * serialized columnar form; `pin` uses MEMORY_AND_DISK_SER instead.
+    * Under a production-sized executor heap that difference is the line
+    * between spilling and OOM: the 4 GiB constrained-heap probe (SCALE.md
+    * round 7) showed checkpoint-heavy iterative operators dying in
+    * storage memory that the SERIALIZED level survives. Every
+    * multiply-consumed pin in the engine goes through here so the storage
+    * level is one decision, not 37.
+    *
+    * MEMORY_AND_DISK_SER: serialized in memory while it fits, spilled to
+    * local disk when it does not — never a correctness cliff, and the
+    * deserialization cost on re-read is dwarfed by the recompute the pin
+    * avoids. (On a real cluster, frames feeding many downstream JOBS
+    * would use reliable checkpoints; local pins are per-session.)
+    *
+    * No row count is observed: the pin costs its one eager job and
+    * nothing else. Corpus-sized state goes through [[pinOrStage]] or
+    * [[regime]] instead. */
+  def pin(df: DataFrame): DataFrame =
+    df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+
+  /** Drop a pinned frame's checkpoint blocks. ONLY for frames every
+    * consumer is finished with — an iterative operator's round-R state
+    * once round R+1 has MATERIALIZED (the new pin's lineage is
+    * truncated, so it no longer references the old blocks). Without
+    * this, a peeling/propagation loop accumulates one superseded edge
+    * copy per round in the PROTECTED storage region and execution
+    * memory starves long before a genuine OOM
+    * (UNABLE_TO_ACQUIRE_MEMORY "got 0" — the q220 100× failure, the
+    * same mechanism as round 9's ProbeOne warmup-pin finding). No-op
+    * for frames that did not come from [[pin]]. */
+  def unpin(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case l: org.apache.spark.sql.execution.LogicalRDD =>
+      l.rdd.unpersist(blocking = false)
+    case _ => ()
+  }
 
   private val seq = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -82,28 +122,18 @@ object StateTable {
       spark.sessionState.conf.numShufflePartitions,
       math.min(4096L, (rows + rowsPerTask - 1) / rowsPerTask).toInt)
 
-  /** A bucketed state table, its row count (counted by the write job,
-    * see [[counted]]) and its cleanup. `drop()` only when every
-    * consumer is finished — eagerly for superseded round state (the
-    * [[Pin.unpin]] discipline, applied to catalog entries: without it a
-    * long session accumulates one catalog registration + parquet tree
-    * per invocation). */
-  final case class Tabled(
-      df: DataFrame, table: String, path: String, rows: Long) {
-    def drop(): Unit = {
-      df.sparkSession.sql(s"DROP TABLE IF EXISTS ${Bucketing.quoted(table)}")
-      TempWork.delete(path)
-    }
-  }
-
   /** Materialize `df` as a hash-bucketed, bucket-sorted parquet table on
     * `keys` with `width` buckets (a caller-measured count). The
     * pre-repartition on the bucket keys at the bucket count aligns
     * writer tasks with buckets (one file per bucket, not one per
-    * task×bucket). */
-  def bucketedAtWidth(
+    * task×bucket). `release()` drops the catalog entry and deletes the
+    * files — eagerly for superseded round state (the [[unpin]]
+    * discipline, applied to catalog entries: without it a long session
+    * accumulates one catalog registration + parquet tree per
+    * invocation). */
+  private[core] def bucketedAtWidth(
       df: DataFrame, keys: Seq[String], width: Int,
-      prefix: String): Tabled = {
+      prefix: String): Placed = {
     val spark = df.sparkSession
     val path = TempWork.dir(s"graft-$prefix")
     val tbl = tableName(spark, prefix)
@@ -111,7 +141,10 @@ object StateTable {
       counted(df.repartition(width, keys.map(col): _*))(
         Bucketing.writeBucketed(_, s"$path/t", tbl, width, keys))
     }
-    Tabled(Bucketing.read(spark, tbl), tbl, path, n)
+    Placed(Bucketing.read(spark, tbl), () => {
+      spark.sql(s"DROP TABLE IF EXISTS ${Bucketing.quoted(tbl)}")
+      TempWork.delete(path)
+    }, n)
   }
 
   /** A placed state frame, its release, and its row count — exact,
@@ -178,7 +211,7 @@ object StateTable {
     } else stage
   }
 
-  /** Pin `df` repartitioned to `width` on `keys` (empty = round-robin),
+  /** [[pin]] `df` repartitioned to `width` on `keys` (empty = round-robin),
     * counting its rows in the pin's own job. The explicit repartition
     * is what bounds the pinned blocks: a user-specified repartition is
     * exempt from AQE coalescing, and on RE-READ of a disk-spilled block
@@ -186,7 +219,7 @@ object StateTable {
     * allocation — the q191 100× failure was 32 session-width blocks of
     * 100+ MB re-cached concurrently under memory pressure, a heap OOM no
     * spill can save. */
-  def pinAt(
+  private[core] def pinAt(
       df: DataFrame, keys: Seq[org.apache.spark.sql.Column],
       width: Int): Placed =
     pinned(
@@ -196,13 +229,16 @@ object StateTable {
   /** Where one call of an iterative graph operator ([[graft.operators.Bfs]],
     * [[graft.operators.TemporalBfs]], [[graft.operators.LabelPropagation]],
     * [[graft.operators.RandomWalks]]) keeps its state, chosen by
-    * [[regime]]. Both calls return a [[Placed]], so the operator runs one
-    * round loop whatever the regime and releases superseded state with
-    * `release()`. Pinned (below the gate), every placement block-pins;
-    * tabled, the join side is a bucketed table and each round its own
-    * parquet dir, so executor storage holds nothing corpus-sized. The
-    * regimes are output-identical (each operator's spec pins them
-    * against each other). `width` is the join side's partition or
+    * [[regime]] — once per call, or once per round for
+    * [[graft.operators.KCore]], whose shrinking peel migrates from tabled
+    * to pinned as it crosses the gate. Both calls return a [[Placed]],
+    * so the operator runs one round loop whatever the regime and
+    * releases superseded state with `release()`. Pinned (below the
+    * gate), every placement block-pins; tabled, the join side is a
+    * bucketed table and each round its own parquet dir, so executor
+    * storage holds nothing corpus-sized. The regimes are
+    * output-identical (each operator's spec pins them against each
+    * other). `width` is the join side's partition or
     * bucket count and the shuffle width every round runs at. */
   final case class Regime(tabled: Boolean, width: Int) {
 
@@ -212,16 +248,14 @@ object StateTable {
       * Tabled: the bucket-sorted [[bucketedAtWidth]] table, whose scans
       * are exchange-free on `key`. */
     def laidOut(df: DataFrame, key: String, prefix: String): Placed =
-      if (tabled) {
-        val t = bucketedAtWidth(df, Seq(key), width, prefix)
-        Placed(t.df, () => t.drop(), t.rows)
-      } else ScopedConf.withShufflePartitions(df.sparkSession, width) {
+      if (tabled) bucketedAtWidth(df, Seq(key), width, prefix)
+      else ScopedConf.withShufflePartitions(df.sparkSession, width) {
         pinned(df.repartition(width, col(key)).sortWithinPartitions(col(key)))
       }
 
     /** One round's state, materialized at `width` (the placement is an
       * action, so the scoped width is sound — [[ScopedConf]]): pinned,
-      * a [[Pin]]; tabled, a parquet dir of its own that `release()`
+      * a [[pin]]; tabled, a parquet dir of its own that `release()`
       * deletes. Either way the result is lineage-truncated, so the
       * previous round's placement can be released once this returns. */
     def round(df: DataFrame, prefix: String): Placed =
@@ -242,8 +276,8 @@ object StateTable {
 
   /** `df` pinned as is, its rows counted by the pin's own job. */
   private def pinned(df: DataFrame): Placed = {
-    val (p, n) = counted(df)(Pin.apply)
-    Placed(p, () => Pin.unpin(p), n)
+    val (p, n) = counted(df)(pin)
+    Placed(p, () => unpin(p), n)
   }
 
   /** `df` landed by [[stageAt]] in a fresh [[TempWork]] dir that
@@ -261,7 +295,7 @@ object StateTable {
     * frame, not error; the PairState empty-segment lesson). For
     * per-round/per-hop dirs whose lifecycle the operator owns (write hop
     * t, delete hop t−1). */
-  def stageAt(df: DataFrame, path: String): DataFrame = {
+  private[core] def stageAt(df: DataFrame, path: String): DataFrame = {
     df.write.option("parquet.block.size", 16L * 1024 * 1024).parquet(path)
     df.sparkSession.read.schema(df.schema).parquet(path)
   }

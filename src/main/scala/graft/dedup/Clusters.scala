@@ -54,10 +54,10 @@ object Clusters {
     // convergence probe
     val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     var iter = 0
     var converged = false
     // `<=`: the final certification round performs no update, so maxIter
@@ -67,7 +67,7 @@ object Clusters {
         .select(col("dst").as("id"), col("comp"))
       val next = labels.union(neigh)
         .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
       val changed = next.as("n")
         .join(labels.as("o"), "id")
         .filter(col("n.comp") < col("o.comp"))
@@ -75,13 +75,13 @@ object Clusters {
       converged = changed == 0L
       // next is materialized with truncated lineage and the probe has
       // run — the superseded labels have no reader (the KCore round
-      // discipline; Pin.unpin: the q220 100× failure)
-      graft.core.Pin.unpin(labels)
+      // discipline; StateTable.unpin: the q220 100× failure)
+      graft.core.StateTable.unpin(labels)
       labels = next
       iter += 1
     }
     // the returned labels are lineage-truncated — nothing reads sym
-    graft.core.Pin.unpin(sym)
+    graft.core.StateTable.unpin(sym)
     require(converged,
       s"connectedComponents did not converge in $maxIter rounds — " +
         "component diameter exceeds the bound; raise maxIter or switch " +
@@ -130,14 +130,14 @@ object Clusters {
         greatest(col("a"), col("b")).as("hi"),
         least(col("a"), col("b")).as("lo"))
       .distinct()
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     // single-node components cannot appear in an edge list, but a node
     // can momentarily lose all edges only if its component collapsed —
     // track the full node set once so the final labeling covers everyone
     val nodes = e.select(col("hi").as("id"))
       .union(e.select(col("lo").as("id")))
       .distinct()
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     var iter = 0
     var converged = e.isEmpty
     while (iter < maxIter && !converged) {
@@ -160,13 +160,13 @@ object Clusters {
         .unionByName(smallMin.select(col("hi"), col("m").as("lo")))
         .filter(col("hi") =!= col("lo"))
         .distinct()
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
       val grew = next.exceptAll(e).limit(1).count() > 0
       val shrank = if (grew) true else e.exceptAll(next).limit(1).count() > 0
       converged = !grew && !shrank
       // next is materialized and both probes have run — the superseded
       // edge set has no reader
-      graft.core.Pin.unpin(e)
+      graft.core.StateTable.unpin(e)
       e = next
       iter += 1
     }

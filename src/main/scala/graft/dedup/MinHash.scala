@@ -178,14 +178,13 @@ object MinHash {
     val nCands = cands.rows
     val nDocs = math.max(1L, docs.count())
     val avgSh = math.max(1L, sh.rows / nDocs)
-    val width = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      math.min(4096L, nCands * avgSh / 2000000L).toInt)
+    val width = graft.core.StateTable.measuredWidth(
+      spark, nCands * avgSh, 2000000L)
     val out = graft.core.ScopedConf.withShufflePartitions(spark, width) {
       verify(cands.df.hint("merge"), sh.df.hint("merge"), idCol)
         .filter(col("jaccard") >= threshold)
         .select(col("id_a"), col("id_b"), col("jaccard"))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
     }
     // the result pin is eager and lineage-truncated, so the input state
     // has no remaining consumer — release it (the KCore discipline:
@@ -260,14 +259,13 @@ object MinHash {
     val nCands = cands0.rows // placement-measured — no re-count job
     val nTouched = math.max(1L, touched.count())
     val avgSh = math.max(1L, candSh0.rows / nTouched)
-    val width = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      math.min(4096L, nCands * avgSh / 2000000L).toInt)
+    val width = graft.core.StateTable.measuredWidth(
+      spark, nCands * avgSh, 2000000L)
     val out = graft.core.ScopedConf.withShufflePartitions(spark, width) {
       verify(cands.hint("merge"), candSh.hint("merge"), idCol)
         .filter(col("jaccard") >= threshold)
         .select(col("id_a"), col("id_b"), col("jaccard"))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
     }
     // same release discipline as the batch path above
     cands0.release()

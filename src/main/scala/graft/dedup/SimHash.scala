@@ -142,7 +142,7 @@ object SimHash {
       // fold over the vocabulary — re-executes per consumer (guide
       // §1.2; measured 9.7 s vs q47's 2.7 s for the same corpus)
       val pinnedFps = fps.select(col(idCol), col("simhash"))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
       val keyedAll = pinnedFps.select(col(idCol), col("simhash"),
           explode(array(chunks: _*)).as("c"))
         .select(col(idCol), col("simhash"),
@@ -167,7 +167,7 @@ object SimHash {
         .distinct()
     case None =>
       val pinned = fps.select(col(idCol), col("simhash"))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
       val fpPairs = fingerprintPairs(
         pinned.select(col("simhash")).distinct(), maxHamming, totalBits)
       val cross = fpPairs
@@ -253,9 +253,9 @@ object SimHash {
       maxBlockSize: Option[Int] = None): DataFrame = {
     val fps = fingerprints(docs, idCol, textCol, tokenHash, totalBits,
         hashDistinct)
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     val groups = fps.groupBy(col("simhash")).agg(min(col(idCol)).as("rep"))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     val intra = fps.join(groups, Seq("simhash"))
       .filter(col(idCol) =!= col("rep"))
       .select(col("rep").as("id_a"), col(idCol).as("id_b"))

@@ -98,7 +98,7 @@ final class IncrementalStatsEngine(spark: SparkSession, val workDir: String) {
       // lineage so the overwrite below cannot invalidate a plan still
       // reading the old files
       val partial = provider.aggregate(
-        store.baseListensRange(from, to)).transform(graft.core.Pin.apply)
+        store.baseListensRange(from, to)).transform(graft.core.StateTable.pin)
       partial.write.mode("overwrite").parquet(partialPath(statName))
       Seq(Bookkeeping(from, to, new Timestamp(System.currentTimeMillis()),
           inputs))

@@ -116,7 +116,7 @@ final class ListenStore(spark: SparkSession, root: String) {
   /** Append an incremental dump chunk (reference dump.py:229-233) and
     * advance the high-water marks from the CHUNK alone (no store scan). */
   def appendIncremental(listens: DataFrame): Unit = {
-    val chunk = listens.transform(graft.core.Pin.apply) // scanned twice: write + high-water
+    val chunk = listens.transform(graft.core.StateTable.pin) // scanned twice: write + high-water
     chunk.write.mode("append").parquet(incPath)
     frameHighWater(chunk).foreach { case (l, c) =>
       val (ml, mc) = highWater match {
@@ -323,7 +323,7 @@ final class ListenStore(spark: SparkSession, root: String) {
     * incremental and deletion side-tables. */
   def compact(): Unit = {
     val merged = retractDeleted(baseListens.unionByName(incrementalListens))
-      .transform(graft.core.Pin.apply) // sever lineage from the paths about to be rewritten
+      .transform(graft.core.StateTable.pin) // sever lineage from the paths about to be rewritten
     writeBase(merged)
     clearSideTables()
   }

@@ -59,7 +59,7 @@ final class DumpImport(
       .unionByName(Seq((dumpId, dumpType,
         new Timestamp(System.currentTimeMillis())))
         .toDF("dump_id", "dump_type", "imported_at"))
-      .transform(graft.core.Pin.apply) // the ledger is rewritten in place below
+      .transform(graft.core.StateTable.pin) // the ledger is rewritten in place below
     updated.repartition(1).write.mode("overwrite").parquet(metaPath)
   }
 
@@ -86,7 +86,7 @@ final class DumpImport(
     store.incrementalListens
       .groupBy(col("user_id"))
       .agg(max(col("created")).as("created"))
-      .transform(graft.core.Pin.apply) // reads the path about to be overwritten
+      .transform(graft.core.StateTable.pin) // reads the path about to be overwritten
       .repartition(1).write.mode("overwrite").parquet(incUsersPath)
     recordImport(dumpId, "incremental")
   }

@@ -35,7 +35,7 @@ object Agreement {
       .filter(col("la").isNotNull && col("lb").isNotNull)
       .groupBy(col("la"), col("lb"))
       .agg(count(lit(1)).as("c"))
-      .transform(graft.core.Pin.apply) // consumed by 3 aggregates
+      .transform(graft.core.StateTable.pin) // consumed by 3 aggregates
     val rows = cells.groupBy(col("la").as("k"))
       .agg(sum(col("c")).as("row_k"))
     val cols = cells.groupBy(col("lb").as("k"))

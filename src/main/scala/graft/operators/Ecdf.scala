@@ -27,7 +27,7 @@ object Ecdf {
       .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
     val cum = PrefixSum.runningTotal(perValue, Seq(col("v")), col("cnt"),
         out = "cum_le")
-      .transform(graft.core.Pin.apply) // consumed by the total + output
+      .transform(graft.core.StateTable.pin) // consumed by the total + output
     val total = cum.agg(sum(col("cnt")).as("n"))
     cum.crossJoin(broadcast(total))
       .select(col("v"), col("cnt"), col("cum_le"),

@@ -36,7 +36,7 @@ object FrequentItemsets {
       .filter(col("i").isNotNull).distinct()
       // feeds the basket count, the item counts, and both pair-join
       // sides — pin it so the distinct runs once (the q191/q199 lesson)
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     val nBaskets = items.select(col("b")).distinct().count()
     val freq = items.groupBy(col("i")).agg(count(lit(1)).as("n_i"))
       .filter(col("n_i") >= minSupport)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.StateTable
 
 /** k-core decomposition by synchronized peeling — the standard graph
   * filter for "dense enough to trust" regions: drop every node whose
@@ -61,7 +62,7 @@ object KCore {
   def core(
       edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int = 4,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
+      tableStateRows: Long = StateTable.DefaultGateRows)
       : DataFrame =
     peel(edges, srcCol, dstCol, k, rounds, strict = true, tableStateRows)
 
@@ -74,7 +75,7 @@ object KCore {
   def boundedPeel(
       edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int = 4,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
+      tableStateRows: Long = StateTable.DefaultGateRows)
       : DataFrame =
     peel(edges, srcCol, dstCol, k, rounds, strict = false, tableStateRows)
 
@@ -93,15 +94,16 @@ object KCore {
     // Round state is corpus-proportional (the directed edge set), so
     // every round's placement is SIZE-GATED (StateTable scaladoc — the
     // round-12 pin-class finding: a corpus-sized block pin is a
-    // cluster-storage budget with an unrecoverable failure mode). Below
-    // the gate: block-pin laid out on the peel key, exactly the old
-    // form. At or above: an `a`-bucketed parquet table, so round R+1's
-    // degree aggregate and first semi-join still read an exchange-free,
-    // key-laid-out scan side — disk-backed parity with the pinned
-    // layout. The edge set only shrinks, so a peel that starts tabled
-    // MIGRATES to pinned once it fits; the regimes are output-identical
-    // (KCoreSpec pins them against each other).
-    var e = graft.core.StateTable.pinOrStage(
+    // cluster-storage budget with an unrecoverable failure mode), and
+    // each round makes it with StateTable.regime. Below the gate:
+    // block-pin laid out on the peel key. At or above: an `a`-bucketed
+    // parquet table, so round R+1's degree aggregate and first
+    // semi-join still read an exchange-free, key-laid-out scan side —
+    // disk-backed parity with the pinned layout. The edge set only
+    // shrinks, so a peel that starts tabled MIGRATES to pinned once it
+    // fits; the regimes are output-identical (KCoreSpec pins them
+    // against each other).
+    var e = StateTable.pinOrStage(
       und.unionByName(und.select(col("b").as("a"), col("a").as("b"))),
       Seq(col("a")), "kcore", gateRows = tableStateRows)
     // every round's edge count is its placement's own measurement (the
@@ -112,7 +114,10 @@ object KCore {
     var converged = prev == 0L
     var r = 0
     while (r < rounds && !converged) {
-      val tabledRound = prev >= tableStateRows
+      // the gate is re-checked every round from the observed prev, and
+      // the surviving edge set is bounded by prev — that measured width
+      // keeps round-R+1 blocks/buckets re-read-sized with no extra count
+      val regime = StateTable.regime(spark, prev, tableStateRows, 500000L)
       val keepBase = e.df.groupBy(col("a")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k).select(col("a"))
       // keep is consumed by both endpoint semi-joins: below the gate it
@@ -120,27 +125,18 @@ object KCore {
       // aggregate passes over the bucketed scan (exchange-free from
       // round 2 on) instead of one more executor-storage pin
       val keep =
-        if (tabledRound) keepBase
-        else keepBase.transform(graft.core.Pin.apply)
-      // the surviving edge set is bounded by prev (already counted) —
-      // that measured width keeps round-R+1 blocks/buckets
-      // re-read-sized with no extra count
-      val nextWidth = graft.core.StateTable.measuredWidth(spark, prev)
+        if (regime.tabled) keepBase
+        else keepBase.transform(StateTable.pin)
       val survivors = e.df.join(keep, Seq("a"), "left_semi")
         .join(keep.select(col("a").as("b")), Seq("b"), "left_semi")
-      val next: graft.core.StateTable.Placed =
-        if (tabledRound) {
-          val t = graft.core.StateTable.bucketedAtWidth(
-            survivors, Seq("a"), nextWidth, "kcore_round")
-          graft.core.StateTable.Placed(t.df, () => t.drop(), t.rows)
-        } else graft.core.StateTable.pinAt(survivors, Seq(col("a")), nextWidth)
+      val next = regime.laidOut(survivors, "a", "kcore_round")
       val c = next.rows
       // next is materialized (pin or table) — the superseded round
       // state releases NOW instead of accumulating one edge copy per
-      // round (Pin.unpin scaladoc: the q220 100× execution-starvation
-      // failure; same discipline for superseded tables on disk)
+      // round (StateTable.unpin scaladoc: the q220 100× execution
+      // starvation; same discipline for superseded tables on disk)
       e.release()
-      graft.core.Pin.unpin(keep)
+      StateTable.unpin(keep)
       e = next
       converged = c == prev || c == 0L
       prev = c

@@ -34,14 +34,14 @@ object KsTest {
   def twoSample(df: DataFrame, score: Column, sample: Column): DataFrame = {
     // consumed twice (cumulation + totals): pin so the corpus
     // aggregate runs once, per the engine's multiply-consumed-frame
-    // discipline (core.Pin)
+    // discipline (core.StateTable.pin)
     val perScore = df
       .select(score.cast("long").as("s"), sample.as("g"))
       .groupBy(col("s"))
       .agg(
         sum(when(col("g"), 1L).otherwise(0L)).as("a1"),
         sum(when(!col("g"), 1L).otherwise(0L)).as("a2"))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     val cum = PrefixSum.runningTotals(
       perScore, Seq(col("s")),
       Seq((col("a1"), "c1"), (col("a2"), "c2")))

@@ -51,11 +51,11 @@ object MassRank {
       Seq(col("src")), "massrank_e", gateRows = tableStateRows)
     val e = eP.df
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("od"))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     var mass = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .withColumn("mass", lit(initMass))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
 
     for (_ <- 1 to iters) {
       val staged = mass.join(outdeg, col("node") === col("src"), "left")
@@ -75,12 +75,15 @@ object MassRank {
             when(col("od").isNull, lit(0L))
               .otherwise(pmod(col("out_mass"), col("od"))) +
             coalesce(col("recv"), lit(0L))).as("mass"))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
       // next is materialized with truncated lineage — release the
       // superseded round's mass pin NOW (the KCore round discipline)
-      graft.core.Pin.unpin(mass)
+      graft.core.StateTable.unpin(mass)
       mass = next
     }
+    // the answer reads only the last mass pin
+    eP.release()
+    graft.core.StateTable.unpin(outdeg)
     mass
   }
 }

@@ -51,7 +51,7 @@ object Mmr {
       s"lambda must satisfy 0 < num <= den, got $lambdaNum/$lambdaDen")
     val base = cands.select(query.as("q"), item.as("i"),
         rel.cast("long").as("rel"), vec.as("v"))
-      .transform(graft.core.Pin.apply) // consumed every round
+      .transform(graft.core.StateTable.pin) // consumed every round
     val byQ = Window.partitionBy(col("q"))
     def pick(scored: DataFrame, rank: Int): DataFrame = scored
       .withColumn("__rn", row_number().over(
@@ -62,7 +62,7 @@ object Mmr {
     var selected = pick(base
       .withColumn("max_sim", lit(0L))
       .withColumn("score", lit(lambdaNum.toLong) * col("rel")), 1)
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     for (t <- 2 to k) {
       val sel = selected.select(col("q").as("sq"), col("i").as("si"),
         col("v").as("sv"))
@@ -77,10 +77,14 @@ object Mmr {
         .withColumn("score",
           lit(lambdaNum.toLong) * col("rel") -
             lit((lambdaDen - lambdaNum).toLong) * col("max_sim"))
-      selected = selected
+      val next = selected
         .unionByName(pick(scored, t))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
+      // next is eager and lineage-truncated: nothing reads selected
+      graft.core.StateTable.unpin(selected)
+      selected = next
     }
+    graft.core.StateTable.unpin(base)
     selected.select(col("q").as("query"), col("rank"),
       col("i").as("item"), col("rel"), col("max_sim"), col("score"))
   }

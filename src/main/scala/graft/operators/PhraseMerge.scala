@@ -148,7 +148,7 @@ object PhraseMerge {
     }
     // acc: (idCol, n_before, n_merges-cumulative, n_after, new_text)
     var acc = mergeOnce(docs, idCol, textCol, discount, scoreNum,
-      scoreDen).transform(graft.core.Pin.apply)
+      scoreDen).transform(graft.core.StateTable.pin)
     var (cum, vocab) = anchors(acc)
     var roundMerges = cum
     val stats =
@@ -167,8 +167,8 @@ object PhraseMerge {
         .select(col(idCol), col("n_before"),
           (col("__m_prev") + col("n_merges")).as("n_merges"),
           col("n_after"), col("new_text"))
-        .transform(graft.core.Pin.apply)
-      graft.core.Pin.unpin(acc)
+        .transform(graft.core.StateTable.pin)
+      graft.core.StateTable.unpin(acc)
       acc = combined
       val (cum2, vocab2) = anchors(acc)
       roundMerges = cum2 - cum

@@ -70,7 +70,7 @@ object PpsSample {
     require(m >= 1L, s"m must be >= 1, got $m")
     val cum = PrefixSum.runningTotal(d,
       Seq(col("ord"), col("id")), col("w"), out = "cum")
-      .transform(graft.core.Pin.apply) // total + output pass
+      .transform(graft.core.StateTable.pin) // total + output pass
     val totals = cum.agg(max(col("cum")).as("big_w"))
     cum.crossJoin(broadcast(totals))
       .withColumn("num_hi", lit(2L * m) * col("cum") - col("big_w"))

@@ -73,7 +73,7 @@ object PrefixSum {
         case (acc, ((v, _), i)) =>
           acc.withColumn(s"__graft_v$i", v.cast("long"))
       }
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
       .withColumn("__graft_pid", spark_partition_id())
     val w = Window.partitionBy(col("__graft_pid"))
       .orderBy(orderCols: _*)

@@ -92,8 +92,8 @@ object ProductQuantization {
     require(iters >= 1 && iters <= 64,
       s"iters must be in [1,64], got $iters")
     graft.functions.GraftFunctions.register(q.sparkSession)
-    val subs = subVectors(q, idCol, m).transform(graft.core.Pin.apply)
-    var books = codebooks(q, idCol, m, k).transform(graft.core.Pin.apply)
+    val subs = subVectors(q, idCol, m).transform(graft.core.StateTable.pin)
+    var books = codebooks(q, idCol, m, k).transform(graft.core.StateTable.pin)
     for (_ <- 1 to iters) {
       val packed = shiftleft(
         col("vn2") + col("scn2") -
@@ -117,14 +117,18 @@ object ProductQuantization {
           x => x.getField("cc")).as("sc8"))
         .withColumn("scn2",
           VectorQuantization.int8Dot(col("sc8"), col("sc8")))
-      books = books.select(col("subspace"), col("code_id"),
+      val next = books.select(col("subspace"), col("code_id"),
           col("sc8").as("__o8"), col("scn2").as("__on2"))
         .join(upd, Seq("subspace", "code_id"), "left")
         .select(col("subspace"), col("code_id"),
           coalesce(col("sc8"), col("__o8")).as("sc8"),
           coalesce(col("scn2"), col("__on2")).as("scn2"))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
+      // next is eager and lineage-truncated: nothing reads books
+      graft.core.StateTable.unpin(books)
+      books = next
     }
+    graft.core.StateTable.unpin(subs)
     books
   }
 

@@ -98,7 +98,7 @@ object QuantizedKMeans {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val q = VectorQuantization.quantizeInt8(emb, vecCol)
       .select(col(idCol), col("q8"), col("qnorm2"))
-    var cents = seedCentroids(q, idCol, k).transform(graft.core.Pin.apply)
+    var cents = seedCentroids(q, idCol, k).transform(graft.core.StateTable.pin)
     var assigned = assign(q, cents, idCol)
     for (_ <- 1 until iters) {
       val upd = updateLong(assigned)
@@ -110,13 +110,16 @@ object QuantizedKMeans {
         .withColumn("cnorm2",
           VectorQuantization.int8Dot(col("c8"), col("c8")))
       // clusters that lost all members keep their previous centroid
-      cents = cents.select(col("cluster_id"), col("c8").as("__old8"),
+      val next = cents.select(col("cluster_id"), col("c8").as("__old8"),
           col("cnorm2").as("__oldn2"))
         .join(upd, Seq("cluster_id"), "left")
         .select(col("cluster_id"),
           coalesce(col("c8"), col("__old8")).as("c8"),
           coalesce(col("cnorm2"), col("__oldn2")).as("cnorm2"))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
+      // next is eager and lineage-truncated: nothing reads cents
+      graft.core.StateTable.unpin(cents)
+      cents = next
       assigned = assign(q, cents, idCol)
     }
     assigned

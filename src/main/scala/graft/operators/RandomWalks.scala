@@ -68,8 +68,8 @@ object RandomWalks {
     * (pre-distinct) edge rows ([[graft.core.StateTable.regime]]): the
     * adjacency and every step join run at its measured width, and
     * below `tableStateRows` the adjacency and per-step frontiers are
-    * block-pinned ([[graft.core.Pin]] — fastest re-scan, zero disk
-    * round-trips); at or above it they become TABLES (a node-bucketed
+    * block-pinned ([[graft.core.StateTable.pin]] — fastest re-scan,
+    * zero disk round-trips); at or above it they become TABLES (a node-bucketed
     * adjacency + one parquet dir per step). The gate exists because a
     * corpus-sized block pin is a CLUSTER-STORAGE budget, not just a
     * block-size problem: the round-12 100× probe under 2×4 GiB real

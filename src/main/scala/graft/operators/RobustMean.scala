@@ -42,7 +42,7 @@ object RobustMean {
       .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
     val cum = PrefixSum.runningTotal(perValue, Seq(col("v")), col("cnt"),
         out = "cum")
-      .transform(graft.core.Pin.apply) // consumed by 3 aggregates
+      .transform(graft.core.StateTable.pin) // consumed by 3 aggregates
     val totals = cum.agg(sum(col("cnt")).as("n"))
       .withColumn("t",
         expr(s"(n * $trimNum) div $trimDen"))
@@ -96,7 +96,7 @@ object RobustMean {
   private def medianMadFrom(perValue: DataFrame): DataFrame = {
     val cum = PrefixSum.runningTotal(perValue, Seq(col("v")), col("cnt"),
         out = "cum")
-      .transform(graft.core.Pin.apply) // total + rank lookup + regroup
+      .transform(graft.core.StateTable.pin) // total + rank lookup + regroup
     val totals = cum.agg(sum(col("cnt")).as("n"))
     def med2Of(cumulated: DataFrame): DataFrame = cumulated
       .crossJoin(broadcast(totals))
@@ -104,7 +104,7 @@ object RobustMean {
         (min(when(col("cum") >= expr("(n + 1) div 2"), col("v"))) +
           min(when(col("cum") >= expr("n div 2 + 1"), col("v"))))
           .as("m2"))
-    val med2 = med2Of(cum).transform(graft.core.Pin.apply)
+    val med2 = med2Of(cum).transform(graft.core.StateTable.pin)
     val devs = cum.crossJoin(broadcast(med2))
       .select(abs(lit(2L) * col("v") - col("m2")).as("v"), col("cnt"))
       .groupBy(col("v")).agg(sum(col("cnt")).as("cnt"))
@@ -138,10 +138,10 @@ object RobustMean {
     require(kNum > 0 && kDen > 0, "threshold must be positive")
     val perValue = df.select(value.cast("long").as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-      .transform(graft.core.Pin.apply) // medianMad passes + outlier pass
+      .transform(graft.core.StateTable.pin) // medianMad passes + outlier pass
     val stats = medianMadFrom(perValue)
       .select(col("n"), col("med2"), col("mad4"))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     perValue.crossJoin(broadcast(stats))
       .withColumn("dev2", abs(lit(2L) * col("v") - col("med2")))
       .withColumn("is_out",

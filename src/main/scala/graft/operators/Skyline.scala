@@ -50,7 +50,7 @@ object Skyline {
       .distinct()
       // consumed three times (scalar min/max, bucket bounds, survivor
       // filter) — pin the distinct so the fact scans once (q191 lesson)
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
 
     // one scalar pass for the bucket geometry (driver anchor, 2 doubles);
     // min/max over an empty frame returns one all-null row — an empty (or

@@ -44,7 +44,7 @@ object AnalyticsQueries {
         .distinct()
         // feeds the cohort min AND the join left side — pin it so the
         // fact scans (and the distinct exchange) run once, not twice
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
       val cohort = uw.groupBy(col("user_id"))
         .agg(min(col("week")).as("cohort_week"))
       val cells = uw.join(cohort, "user_id")
@@ -231,7 +231,7 @@ object AnalyticsQueries {
         // the presence set feeds the scalar count, the marginals, and
         // BOTH sides of the pair join — pin it (the q191 lesson) so the
         // sessionization window runs once, not four times
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
       val nSessions = sess.select(col("user_id"), col("session_id"))
         .distinct().count()
       val marginals = sess.groupBy(col("e")).agg(count(lit(1)).as("n_e"))

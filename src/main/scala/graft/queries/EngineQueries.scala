@@ -951,7 +951,7 @@ object EngineQueries {
         .select(col("o_custkey").as("user_id"),
           col("l_shipdate").cast("timestamp").as("listened_at"),
           col("p_partkey"), col("p_brand"))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
       val releases = purchases
         .groupBy(col("p_partkey"), col("p_brand"))
         .agg(min(col("listened_at")).as("release_date"))
@@ -1021,7 +1021,7 @@ object EngineQueries {
         .select(col("o_custkey").as("user_id"),
           col("l_shipdate").cast("timestamp").as("listened_at"),
           col("p_partkey"), art.as("artist"))
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
       val releases = purchases
         .groupBy(col("p_partkey"), col("artist"))
         .agg(min(col("listened_at")).as("release_date"))

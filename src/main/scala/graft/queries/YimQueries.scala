@@ -255,7 +255,7 @@ object MusicQueries {
       // anti join; materialize the distinct once (same rationale as
       // UserCosine.exact)
       val cp = l.select(col("user_id"), col("recording_mbid")).distinct()
-        .transform(graft.core.Pin.apply)
+        .transform(graft.core.StateTable.pin)
       // top-3 by shared distinct recordings via HIERARCHICAL top-k:
       // each ChunkedPairs chunk reduces its complete pair aggregate to
       // ≤3 rows per user before anything is written, so the pair

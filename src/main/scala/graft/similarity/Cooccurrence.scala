@@ -40,11 +40,11 @@ object Cooccurrence {
     val pres = events
       .select(col(itemCol).as("item"), col(userCol).as("user"))
       .distinct()
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     // scalar anchor: one long for the PMI normalizer
     val nUsers = pres.select(col("user")).distinct().count()
     val deg = pres.groupBy(col("item")).agg(count(lit(1)).as("d"))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     val paired = maxItemUsers match {
       case Some(cap) => pres.join(
         deg.filter(col("d") <= cap).select(col("item")), Seq("item"))
@@ -73,7 +73,7 @@ object Cooccurrence {
   def scoreCounts(
       pairs: DataFrame, presence: DataFrame,
       minBoth: Long = 2L): DataFrame = {
-    val pres = presence.transform(graft.core.Pin.apply)
+    val pres = presence.transform(graft.core.StateTable.pin)
     val nUsers = pres.select(col("user")).distinct().count()
     val deg = pres.groupBy(col("item")).agg(count(lit(1)).as("d"))
     pairs.filter(col("users_both") >= minBoth)
@@ -118,7 +118,7 @@ object Cooccurrence {
     val bp = batch.select(col(itemCol).as("item"), col(userCol).as("user"))
       .distinct()
     val newPres = bp.join(presence, Seq("item", "user"), "left_anti")
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     // (n.item, user) is new and (o.item, user) is prior state, so the
     // two items can never coincide — no self-pair filter needed
     val d1 = newPres.alias("n")
@@ -153,9 +153,8 @@ object Cooccurrence {
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
     val spark = batch.sparkSession
-    val width = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      math.min(4096L, (nPairs + deltaTerms) / 2000000L).toInt)
+    val width = graft.core.StateTable.measuredWidth(
+      spark, nPairs + deltaTerms, 2000000L)
     val merged = pairs.unionByName(delta)
       .repartition(width, col("item_a"), col("item_b"))
       .groupBy(col("item_a"), col("item_b"))

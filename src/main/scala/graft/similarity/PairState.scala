@@ -142,7 +142,7 @@ final class PairState private (
       .select(col(itemCol).as("item"), col(userCol).as("user")).distinct()
     val pres = presence()
     val newPres = bp.join(pres, Seq("item", "user"), "left_anti")
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     // (n.item, user) is new and (o.item, user) is prior state, so the
     // two items can never coincide — no self-pair filter needed
     val d1 = newPres.alias("n")
@@ -181,7 +181,7 @@ final class PairState private (
     newPres.write.mode("append")
       .option("parquet.block.size", RowGroupBytes)
       .parquet(s"$path/presence")
-    graft.core.Pin.unpin(newPres)
+    graft.core.StateTable.unpin(newPres)
     val m = readMeta()
     val segRows = m.segRows + nSeg
     writeMeta(m.copy(segRows = segRows))
@@ -219,10 +219,9 @@ final class PairState private (
     // ≤buckets non-empty blocks.
     val segBytes = segs
       .map(p => fs.getContentSummary(hp(p)).getLength).sum
-    val segWidth = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      math.min(4096L, segBytes / (2L * 1024 * 1024)).toInt)
-    val segDf = graft.core.Pin(readSegs(segs).repartition(segWidth))
+    val segWidth = graft.core.StateTable.measuredWidth(
+      spark, segBytes, 2L * 1024 * 1024)
+    val segDf = graft.core.StateTable.pin(readSegs(segs).repartition(segWidth))
     val touched = segDf.select(col("pk")).distinct()
       .collect().map(_.getAs[Number](0).longValue()).sorted
     // the driver-side collect above is bounded by construction — pk is
@@ -238,9 +237,8 @@ final class PairState private (
     // says, and a user-specified repartition is exempt.
     val carried =
       m.baseRows * touched.length / math.max(1, buckets) + m.segRows
-    val width = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      math.min(4096L, carried / 2000000L).toInt)
+    val width = graft.core.StateTable.measuredWidth(
+      spark, carried, 2000000L)
     val basePath = s"$path/base"
     val touchedBase = ParquetFooters.read(spark, basePath)
       .filter(col("pk").isin(touched.map(Long.box): _*))
@@ -259,7 +257,7 @@ final class PairState private (
       .agg(sum(col("users_both")).as("users_both"))
       .write.option("parquet.block.size", RowGroupBytes)
       .partitionBy("pk").parquet(tmp)
-    graft.core.Pin.unpin(segDf)
+    graft.core.StateTable.unpin(segDf)
     // commit point: once the marker is durable, the staged fold output
     // is authoritative for the listed pks and the listed segments are
     // consumed — finishSwap (here or from a post-crash open) completes
@@ -391,7 +389,7 @@ object PairState {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val pres = events
       .select(col(itemCol).as("item"), col(userCol).as("user"))
-      .distinct().transform(graft.core.Pin.apply)
+      .distinct().transform(graft.core.StateTable.pin)
     pres.write.option("parquet.block.size", RowGroupBytes)
       .parquet(s"$path/presence")
     val st = new PairState(spark, path, buckets)
@@ -403,7 +401,7 @@ object PairState {
       .withColumn("pk", st.pkOf)
       .write.option("parquet.block.size", RowGroupBytes)
       .partitionBy("pk").parquet(s"$path/base")
-    graft.core.Pin.unpin(pres)
+    graft.core.StateTable.unpin(pres)
     val baseRows = ParquetFooters.read(spark, s"$path/base").count()
     require(baseRows > 0,
       "PairState.create needs a corpus with at least one co-present pair")

@@ -61,7 +61,7 @@ object UserCosine {
           .select(col("it"))
         raw.join(degree, Seq("it"))
       case None => raw
-    }).transform(graft.core.Pin.apply)
+    }).transform(graft.core.StateTable.pin)
   }
 
   /** Per-user top-k most-similar users by exact cosine — [[exact]]'s
@@ -85,7 +85,7 @@ object UserCosine {
     val counts = countsOf(listens, userCol, itemCol, maxItemListeners)
     val norms = counts.groupBy(col("u"))
       .agg(sum(col("c") * col("c")).as("norm2"))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("similarity").desc, col("other_user_id"))
@@ -280,10 +280,10 @@ object UserCosine {
       .groupBy(col(userCol).cast("long").as("u"),
         col(itemCol).cast("string").as("it"))
       .agg(count(lit(1)).as("c"))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     val norms = counts.groupBy(col("u"))
       .agg(sum(col("c") * col("c")).as("norm2"))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     // norms is one row per user, and this join feeds the bucketed
     // write that every chunk job reads — an extra exchange here is a
     // full counts-sized shuffle. An UNCONDITIONAL broadcast() hint is
@@ -326,9 +326,9 @@ object UserCosine {
       .filter(col("similarity") >= tau)
       .withColumn("similarity", round(col("similarity"), 6))
       .select(col("u1"), col("u2"), col("similarity"))
-      .transform(graft.core.Pin.apply)
-    graft.core.Pin.unpin(counts)
-    graft.core.Pin.unpin(norms)
+      .transform(graft.core.StateTable.pin)
+    graft.core.StateTable.unpin(counts)
+    graft.core.StateTable.unpin(norms)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("similarity").desc, col("other_user_id"))

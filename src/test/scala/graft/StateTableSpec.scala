@@ -6,9 +6,16 @@ import graft.core.StateTable
 /** [[graft.core.StateTable]] — the size-gated placement primitive the
   * graph/dedup operators share (round-13 port of the RandomWalks tabled
   * gate): pin-below / stage-above semantics, release lifecycles, and
-  * session-unique bucketed-table naming. */
+  * session-unique bucketed-table naming. The bucketed table is reached
+  * through its gate, a tabled [[StateTable.Regime]]'s `laidOut`. */
 class StateTableSpec extends SparkSpec {
   import spark.implicits._
+
+  private val tabled4 = StateTable.Regime(tabled = true, width = 4)
+
+  private def graftTables: Set[String] =
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_")).toSet
 
   test("pinOrStage below the gate pins (no surviving stage files) and " +
     "release unpins") {
@@ -97,11 +104,14 @@ class StateTableSpec extends SparkSpec {
   test("bucketed tables get session-unique names, scan exchange-free " +
     "on the bucket key, and drop() removes catalog entry + files") {
     val df = (1L to 200L).map(i => (i % 20, i)).toDF("g", "v")
-    val t1 = StateTable.bucketedAtWidth(df, Seq("g"), 4, "sts_tbl")
-    val t2 = StateTable.bucketedAtWidth(df, Seq("g"), 4, "sts_tbl")
-    assert(t1.table !== t2.table, "two materializations must not collide")
-    assert(t1.table.contains(
-      spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")),
+    val before = graftTables
+    val t1 = tabled4.laidOut(df, "g", "sts_tbl")
+    val t2 = tabled4.laidOut(df, "g", "sts_tbl")
+    val made = graftTables -- before
+    assert(made.size === 2, "two materializations must not collide")
+    val app = spark.sparkContext.applicationId
+      .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
+    assert(made.forall(_.toLowerCase.contains(app)),
       "table name must carry the application id")
     // a groupBy on the bucket key plans with zero shuffle exchanges
     val agg = t1.df.groupBy(col("g")).agg(sum(col("v")).as("s"))
@@ -109,9 +119,9 @@ class StateTableSpec extends SparkSpec {
       "bucket-key aggregate must be exchange-free")
     assert(agg.collect().length === 20)
     val files = t1.df.inputFiles
-    t1.drop()
-    t2.drop()
-    assert(!spark.catalog.tableExists(t1.table))
+    t1.release()
+    t2.release()
+    assert(graftTables === before)
     assert(!files.exists(f =>
       java.nio.file.Files.exists(
         java.nio.file.Paths.get(f.stripPrefix("file:")))))
@@ -122,7 +132,7 @@ class StateTableSpec extends SparkSpec {
     val df = (1L to 60L).map(i => (i, i % 5)).toDF("k", "v")
     // gate 1000, bound 100: measuredWidth is the session width, 4
     val bare = jobsDuring(
-      graft.core.Pin.unpin(graft.core.Pin(df.repartition(4, col("k")))))
+      StateTable.unpin(StateTable.pin(df.repartition(4, col("k")))))
     var placed: StateTable.Placed = null
     val bound = jobsDuring {
       placed = StateTable.pinOrStage(df, Seq(col("k")), "sts_jobs",
@@ -148,24 +158,24 @@ class StateTableSpec extends SparkSpec {
         gateRows = 0L)
       assert(!staged.df.queryExecution.analyzed
         .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-      val tabled = StateTable.bucketedAtWidth(df, Seq("k"), 4, "sts_empty_t")
+      val tabled = tabled4.laidOut(df, "k", "sts_empty_t")
       assert(Seq(pinned.rows, staged.rows, tabled.rows) === Seq(0L, 0L, 0L))
       assert(pinned.df.collect().isEmpty)
       assert(staged.df.collect().isEmpty)
       assert(tabled.df.collect().isEmpty)
       pinned.release()
       staged.release()
-      tabled.drop()
+      tabled.release()
     }
   }
 
   test("bucketedAtWidth reports the table's row count") {
     val df = (1L to 200L).map(i => (i % 20, i)).toDF("g", "v")
       .filter(col("v") % 3 =!= 0L)
-    val t = StateTable.bucketedAtWidth(df, Seq("g"), 4, "sts_tbl_rows")
+    val t = tabled4.laidOut(df, "g", "sts_tbl_rows")
     assert(t.rows === df.count())
     assert(t.df.count() === t.rows)
-    t.drop()
+    t.release()
   }
 
   test("regime: one count sets the gate and the width, both regimes " +

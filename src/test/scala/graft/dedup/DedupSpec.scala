@@ -207,10 +207,10 @@ class DedupSpec extends SparkSpec {
     // fixture would legitimately broadcast); the hint must hold WITH the
     // production frame shape
     val cands = MinHash.incrementalCandidates(newBk, idx, "doc_id")
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     val sh = MinHash.shingles(
         corpus.unionByName(batch), "doc_id", "text", 3)
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     val v = MinHash.verify(cands.hint("merge"), sh.hint("merge"), "doc_id")
     // the pre-AQE physical plan: every join at or above the verify stage
     // must be sort-merge — zero BroadcastHashJoin nodes

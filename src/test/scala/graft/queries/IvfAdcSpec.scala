@@ -24,7 +24,7 @@ class IvfAdcSpec extends SparkSpec {
     VectorQuantization
       .quantizeInt8(rows.toDF("vec_id", "embedding"), "embedding")
       .select(col("vec_id"), col("q8"), col("qnorm2"))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
   }
   private val qids = Set(33L, 34L, 35L) // the last member of each cluster
   private def corpus = quantized.filter(!col("vec_id").isin(qids.toSeq: _*))

@@ -90,7 +90,7 @@ class ProductQuantizationSpec extends SparkSpec {
     val q = quant(rows.toDF("vec_id", "embedding"))
     val qids = Set(9L, 19L, 29L, 39L) // one query per cluster
     val corpus = q.filter(!col("vec_id").isin(qids.toSeq: _*))
-      .transform(graft.core.Pin.apply)
+      .transform(graft.core.StateTable.pin)
     val queries = q.filter(col("vec_id").isin(qids.toSeq: _*))
     // exact integer-L2 ground truth from the same quantized codes
     val all = q.collect().map(r =>

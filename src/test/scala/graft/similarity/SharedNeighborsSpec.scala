@@ -43,7 +43,7 @@ class SharedNeighborsSpec extends SparkSpec {
   }
 
   private def run(k: Int, chunks: Int) =
-    SharedNeighbors.topK(presence.transform(graft.core.Pin.apply),
+    SharedNeighbors.topK(presence.transform(graft.core.StateTable.pin),
         "user_id", "item_id", k, pairChunks = chunks)
       .orderBy(col("user_id"), col("other_user_id"))
       .collect().toSeq
