@@ -28,9 +28,11 @@ import org.apache.spark.storage.StorageLevel
   *   - [[bucketedAtWidth]] — a hash-bucketed, bucket-sorted catalog
   *     table, for state an iterative operator re-JOINS or re-GROUPS on
   *     the bucket key every round (adjacency lists, peel state): every
-  *     key-aligned consumer gets an exchange-free, sort-free scan side —
-  *     disk-backed parity with the `repartition(width, key)` layout the
-  *     pinned form ([[pinAt]]) preserves.
+  *     key-aligned consumer gets an exchange-free, sort-free scan side.
+  *     The pinned form's `repartition(width, key)` layout bounds each
+  *     pinned block but is not visible to the planner under AQE (the
+  *     pin reports `UnknownPartitioning(0)`), so round joins still
+  *     re-shuffle the pinned side; ROADMAP direction 1.
   *   - [[stageAt]] — a plain parquet dir with 16 MB row groups, for
   *     state whose consumers shuffle on non-layout keys anyway
   *     (candidate pairs, frontier steps, canonical edge sets): bucketing

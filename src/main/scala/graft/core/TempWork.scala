@@ -75,29 +75,12 @@ object TempWork {
     if (p.startsWith(root)) deleteTree(p)
   }
 
-  /** Delete EVERY scratch tree under the managed root — the between-
-    * queries hygiene hook for a long session running many independent
-    * queries (graft.Bench): once a query's terminal action has run, its
-    * scratch has no reader, and leaving 200+ queries' trees on disk
-    * turns the tail of a long run into writeback of the head's dirty
-    * pages (measured on the round-13 box — OPTIMIZATION_r13.md, full-run
-    * vs isolated numbers). Callers must only invoke this BETWEEN
-    * queries, never while any frame that scans scratch is still live —
-    * the same contract as [[delete]], applied to everything at once. */
-  def sweepAll(): Unit = {
-    val s = Files.list(root)
-    val entries = scala.collection.mutable.ListBuffer.empty[Path]
-    try s.forEach(p => entries += p) finally s.close()
-    entries.foreach(deleteTree)
-  }
-
   /** Names of the root's current children — take one before running a
     * query, pass it to [[sweepCreatedSince]] after, and "this query's
     * scratch" becomes a STRUCTURAL invariant instead of a documented
     * one: anything that existed before the query is never touched, so a
     * future cross-query fixture (or a concurrent user of the same JVM)
-    * cannot have its files yanked mid-read (ADVICE r13 on sweepAll's
-    * scaladoc-only contract). */
+    * cannot have its files yanked mid-read. */
   def snapshot(): Set[String] = {
     val s = Files.list(root)
     val names = scala.collection.mutable.Set.empty[String]

@@ -18,56 +18,42 @@ object ChunkedRunner {
 
   /** @param chunkPredicates disjoint predicates covering the input (e.g.
     *        user-prefix ranges); each chunk is aggregated in its own job.
-    * @param maxConcurrent chunk jobs in flight at once (guide §2.6:
-    *        actions are only sequential because the driver calls them
-    *        sequentially — chunk jobs are independent, so a small pool
-    *        lets the next job's tasks back-fill executors freed by the
-    *        current job's straggler tail; 16 hex chunks at 1/16th the
-    *        work each otherwise leave most cores idle 16 times per
-    *        run). Bounded because concurrency multiplies the peak
-    *        chunk state the decomposition exists to bound: the default
-    *        derives from the JVM's own memory budget — one job per
-    *        ~2 GiB of max heap, clamped to [1, 4] — so a
-    *        production-sized heap overlaps a few bounded chunks while
-    *        a constrained probe (the 4 GiB tier) degrades toward the
-    *        strictly-sequential contract. */
+    *
+    * Chunk jobs are independent, so they run from a small fixed pool
+    * (guide §2.6: actions are only sequential because the driver calls
+    * them sequentially): the next job's tasks back-fill executors freed
+    * by the current job's straggler tail, where 16 hex chunks at 1/16th
+    * the work each would otherwise leave most cores idle 16 times per
+    * run. The pool is bounded because concurrency multiplies the peak
+    * chunk state the decomposition exists to bound: one thread per
+    * ~2 GiB of max heap, clamped to [1, 4], so a production-sized heap
+    * overlaps a few bounded chunks while a constrained heap (the 4 GiB
+    * tier) runs them one at a time, in order. */
   def run(
       spark: SparkSession,
       listens: DataFrame,
       provider: StatsProvider,
       chunkPredicates: Seq[Column],
-      workDir: String,
-      maxConcurrent: Int = 0): DataFrame = {
-    val conc = math.max(1, math.min(chunkPredicates.size,
-      if (maxConcurrent > 0) maxConcurrent
-      else math.min(4L,
-        Runtime.getRuntime.maxMemory() / (2L * 1024 * 1024 * 1024)).toInt))
+      workDir: String): DataFrame = {
+    val conc = math.max(1, math.min(chunkPredicates.size, math.min(4L,
+      Runtime.getRuntime.maxMemory() / (2L * 1024 * 1024 * 1024)).toInt))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(conc)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
     val chunkPaths =
-      if (conc <= 1)
-        chunkPredicates.zipWithIndex.map { case (pred, i) =>
-          val path = s"$workDir/chunk_$i"
-          provider.aggregate(listens.filter(pred))
-            .write.mode("overwrite").parquet(path)
-          path
-        }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(conc)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try {
-          val fs = chunkPredicates.zipWithIndex.map { case (pred, i) =>
-            scala.concurrent.Future {
-              val path = s"$workDir/chunk_$i"
-              provider.aggregate(listens.filter(pred))
-                .write.mode("overwrite").parquet(path)
-              path
-            }
+      try {
+        val fs = chunkPredicates.zipWithIndex.map { case (pred, i) =>
+          scala.concurrent.Future {
+            val path = s"$workDir/chunk_$i"
+            provider.aggregate(listens.filter(pred))
+              .write.mode("overwrite").parquet(path)
+            path
           }
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(fs),
-            scala.concurrent.duration.Duration.Inf)
-        } finally pool.shutdown()
-      }
+        }
+        scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence(fs),
+          scala.concurrent.duration.Duration.Inf)
+      } finally pool.shutdown()
     val partials = ParquetFooters.read(spark, chunkPaths: _*)
     provider.stats(provider.combine(partials))
   }

@@ -53,6 +53,11 @@ final case class Bookkeeping(
     from_date: Timestamp, to_date: Timestamp, updated_at: Timestamp,
     inputs: Seq[String])
 
-/** High-water marks for incremental ingestion
-  * (reference `INCREMENTAL_BOOKKEEPING_SCHEMA`, schema.py:23-26). */
-final case class IncrementalBookkeeping(created: Timestamp, updated_at: Timestamp)
+/** Record of a materialized user-bucketed projection
+  * ([[ListenStore.materializeUserBucketed]]): the catalog table, its
+  * location, bucket count and schema DDL, and the store files it was
+  * built from, which [[ListenStore.userBucketed]] compares to decide
+  * freshness. */
+final case class BucketedProjection(
+    table: String, path: String, buckets: Int, schema_ddl: String,
+    inputs: Seq[String])

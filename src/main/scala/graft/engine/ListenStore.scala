@@ -1,8 +1,9 @@
 package graft.engine
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 import graft.core.ParquetFooters
 
 /** Physical listen storage: year/month-partitioned parquet with an
@@ -23,6 +24,11 @@ import graft.core.ParquetFooters
   * Scale: partitioning by (year, month) keeps one month's listens per
   * partition directory; a stats window of N months scans exactly N
   * directories regardless of total history size.
+  *
+  * Derived state (the engine's cached base partials, the user-bucketed
+  * projection) is reused only while the store's data-file list it was
+  * built from is unchanged ([[partialInputs]], [[userBucketed]]): one
+  * staleness rule, with no clock and no directory modification time.
   */
 final class ListenStore(spark: SparkSession, root: String) {
   private val basePath = s"$root/base"
@@ -33,13 +39,9 @@ final class ListenStore(spark: SparkSession, root: String) {
   private val metadataPath = s"$root/metadata"
   private val bucketedMetaPath = s"$root/bucketed-meta"
 
-  private val metadataSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("max_listened_at",
-      org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("max_created",
-      org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("updated_at",
-      org.apache.spark.sql.types.TimestampType)))
+  private val metadataSchema = StructType(Seq(
+    StructField("max_listened_at", TimestampType),
+    StructField("max_created", TimestampType)))
 
   /** Stored (max_listened_at, max_created) high-water marks, maintained at
     * WRITE time — the reference's listens-metadata singleton
@@ -48,17 +50,11 @@ final class ListenStore(spark: SparkSession, root: String) {
     * store, which at 100 TB would be a full scan before every query.
     * Advance-only, like the reference: deletions never lower it. */
   def highWater: Option[(Timestamp, Timestamp)] =
-    metadataRow.map(r => (r._1, r._2))
-
-  /** Full metadata row incl. updated_at — the write stamp advances on
-    * EVERY import (even a backfill whose listens don't move the
-    * high-water), which is what bucketed-projection freshness keys on. */
-  private def metadataRow: Option[(Timestamp, Timestamp, Timestamp)] =
     if (exists(metadataPath)) {
       spark.read.schema(metadataSchema).json(metadataPath)
         .collect().headOption
         .filter(!_.isNullAt(0))
-        .map(r => (r.getTimestamp(0), r.getTimestamp(1), r.getTimestamp(2)))
+        .map(r => (r.getTimestamp(0), r.getTimestamp(1)))
     } else None
 
   /** Persist high-water marks computed elsewhere — the self-healing hook
@@ -158,16 +154,20 @@ final class ListenStore(spark: SparkSession, root: String) {
   def incrementalListens: DataFrame = readOrEmpty(incPath, Listen.schema)
 
   /** Paths, relative to the store root, of the data files under the base
-    * and the two deletion trees: what a cached base partial depends on.
-    * Every write to those trees, an overwrite included, lands part files
-    * with a fresh per-write name, so an unchanged list means unchanged
-    * base listens and retractions, with no reliance on modification
-    * times. */
-  def partialInputs: Seq[String] = {
+    * and the two deletion trees: what a cached base partial depends on. */
+  def partialInputs: Seq[String] =
+    dataFiles(Seq(basePath, deletedPath, deletedHistoryPath))
+
+  /** Paths, relative to the store root, of the data files under `trees`,
+    * sorted. Every write to the store's trees, an overwrite included,
+    * lands part files with a fresh per-write name, so an unchanged list
+    * means unchanged listens and retractions, with no reliance on
+    * modification times. */
+  private def dataFiles(trees: Seq[String]): Seq[String] = {
     val rootUri = fsFor(root).makeQualified(
       new org.apache.hadoop.fs.Path(root)).toUri.getPath
     ParquetFooters.leafFiles(spark.sparkContext.hadoopConfiguration,
-        Seq(basePath, deletedPath, deletedHistoryPath), None)
+        trees, None)
       .map(_.getPath.toUri.getPath.stripPrefix(rootUri)).sorted
   }
 
@@ -234,56 +234,35 @@ final class ListenStore(spark: SparkSession, root: String) {
     * refreshes cached partials; bucket count is a layout constant.
     *
     * The projection's identity (table, path, buckets, schema) and the
-    * store high-water it was built at are persisted next to the store, so
-    * [[userBucketed]] can serve it to request dispatch — and refuse to
-    * once imports advance the store past it. */
+    * store's data-file list it was built from are persisted next to the
+    * store, so [[userBucketed]] can serve it to request dispatch — and
+    * refuse to once any write changes that list. */
   def materializeUserBucketed(
       table: String, path: String, buckets: Int): DataFrame = {
-    // stamp BEFORE reading anything: a deletion appended while the
-    // materializing job runs may or may not be retracted by the scan, so
-    // it must classify the projection stale (mtime >= this stamp)
-    val matStart = new Timestamp(System.currentTimeMillis())
+    // listed before the scan, as the engine lists a partial's inputs: a
+    // write landing while the projection is built leaves the record stale
+    val inputs = projectionInputs
     val df = retractDeleted(baseListens.unionByName(incrementalListens))
     graft.core.Bucketing.writeBucketed(df, path, table, buckets, Seq("user_id"))
     import spark.implicits._
-    val zero = new Timestamp(0L)
-    val (hwL, hwC, upd) = metadataRow.getOrElse((zero, zero, zero))
-    Seq((table, path, buckets, df.schema.toDDL, hwL, hwC, upd, matStart))
-      .toDF("table", "path", "buckets", "schema_ddl",
-        "max_listened_at", "max_created", "store_updated_at",
-        "materialized_at")
-      .repartition(1).write.mode("overwrite").json(bucketedMetaPath)
+    Seq(BucketedProjection(table, path, buckets, df.schema.toDDL, inputs))
+      .toDS().repartition(1).write.mode("overwrite").json(bucketedMetaPath)
     graft.core.Bucketing.read(spark, table)
   }
 
-  private val bucketedMetaSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("table",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("path",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("buckets",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("schema_ddl",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("max_listened_at",
-      org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("max_created",
-      org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("store_updated_at",
-      org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("materialized_at",
-      org.apache.spark.sql.types.TimestampType)))
+  /** What the projection is built from: every data file of the base, the
+    * incremental sibling and both deletion trees. */
+  private def projectionInputs: Seq[String] =
+    dataFiles(Seq(basePath, incPath, deletedPath, deletedHistoryPath))
 
-  /** The user-bucketed projection, IF one is materialized and still fresh.
-    * Freshness keys on the FULL metadata row — high-water marks AND the
-    * write stamp, so a backfill import whose listens don't move the
-    * high-water still stales it (every import rewrites updated_at), as do
-    * compaction and full-dump rewrites (writeBase restamps metadata even
-    * when the recomputed marks coincide). Deletion side-tables must not
-    * have been touched at-or-after the materialization START (deletions
-    * are retracted by the materializing scan, so a strictly-earlier mtime
-    * is provably incorporated; anything concurrent classifies stale).
-    * Dispatch treats None as "use the normal partitioned read path" — the
+  /** The user-bucketed projection, IF one is materialized and still fresh:
+    * fresh exactly when the store's data-file list equals the one recorded
+    * when it was built — the rule [[IncrementalStatsEngine]] applies to its
+    * cached partials. Any import, deletion, compaction or full-dump
+    * rewrite lands new part files (or removes old ones), so it stales the
+    * projection whatever the listens' timestamps or the directories'
+    * modification times; a record with no list reads as stale. Dispatch
+    * treats None as "use the normal partitioned read path" — the
     * projection is an accelerator, not a correctness dependency.
     *
     * The catalog registration does not survive a new SparkSession; the
@@ -292,29 +271,20 @@ final class ListenStore(spark: SparkSession, root: String) {
   def userBucketed: Option[DataFrame] =
     if (!exists(bucketedMetaPath)) None
     else {
-      val m = spark.read.schema(bucketedMetaSchema).json(bucketedMetaPath)
-        .collect()(0)
-      val (table, path, buckets) = (m.getString(0), m.getString(1), m.getInt(2))
-      val zero = new Timestamp(0L)
-      val fresh =
-        metadataRow.getOrElse((zero, zero, zero)) ==
-          ((m.getTimestamp(4), m.getTimestamp(5), m.getTimestamp(6))) &&
-        Seq(deletedPath, deletedHistoryPath).forall { p =>
-          !exists(p) || fsFor(p).getFileStatus(
-              new org.apache.hadoop.fs.Path(p)).getModificationTime <
-            m.getTimestamp(7).getTime
-        }
-      if (!fresh) None
+      import spark.implicits._
+      val m = spark.read.schema(Encoders.product[BucketedProjection].schema)
+        .json(bucketedMetaPath).as[BucketedProjection].head()
+      if (m.inputs != projectionInputs) None
       else {
-        if (!spark.catalog.tableExists(table))
+        if (!spark.catalog.tableExists(m.table))
           spark.sql(
-            s"""CREATE TABLE ${graft.core.Bucketing.quoted(table)}
-               |(${m.getString(3)})
+            s"""CREATE TABLE ${graft.core.Bucketing.quoted(m.table)}
+               |(${m.schema_ddl})
                |USING parquet
                |CLUSTERED BY (user_id) SORTED BY (user_id)
-               |INTO $buckets BUCKETS
-               |LOCATION '$path'""".stripMargin)
-        Some(graft.core.Bucketing.read(spark, table))
+               |INTO ${m.buckets} BUCKETS
+               |LOCATION '${m.path}'""".stripMargin)
+        Some(graft.core.Bucketing.read(spark, m.table))
       }
     }
 

@@ -127,13 +127,6 @@ object Als {
       validationRmse = fitted.avgMetrics(bestIdx))
   }
 
-  def trainWithGrid(
-      playcounts: DataFrame,
-      ranks: Seq[Int] = Seq(4, 8),
-      regParams: Seq[Double] = Seq(0.1, 1.0),
-      alphas: Seq[Double] = Seq(3.0)): ALSModel =
-    trainWithGridDetailed(playcounts, ranks, regParams, alphas).model
-
   /** Top-k recommendations for a user subset, flat (user, rank, item,
     * score) — the reference recommends per requested user batch
     * (`recommendForUserSubset`, recommend.py:293), not for the full user

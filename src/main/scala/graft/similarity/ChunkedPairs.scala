@@ -96,20 +96,17 @@ object ChunkedPairs {
       // aggregates, and the chunked run pays only per-job latency.
       val spark = counts.sparkSession
       val dir = workDir.getOrElse(graft.core.TempWork.dir("pair-chunks"))
-      val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val tbl = s"graft_pair_counts_${tableSeq.getAndIncrement()}"
-      // repartition on the bucket key first: one writer task per bucket
-      // → ONE file per bucket, which is what lets the scan's sortBy
-      // metadata stand in for the SMJ sort (multi-file buckets force
-      // Spark to re-sort both sides in every chunk job)
-      graft.core.Bucketing.writeBucketed(
-        counts.select(col(uCol).as("u"), col(itCol).as("it"),
-            col(cCol).as("c"))
-          .repartition(buckets, col("it")),
-        s"$dir/counts-bkt", tbl, buckets, Seq("it"))
-      val bk = graft.core.Bucketing.read(spark, tbl)
-      val ab = bk.select(col("u").as("u1"), col("it"), col("c").as("c1"))
-      val bb = bk.select(col("u").as("u2"), col("it"), col("c").as("c2"))
+      // one file per bucket, sorted, so the scan's sortBy metadata stands
+      // in for the SMJ sort (multi-file buckets force Spark to re-sort
+      // both sides in every chunk job)
+      val bucketed = graft.core.StateTable.Regime(tabled = true,
+          width = spark.conf.get("spark.sql.shuffle.partitions").toInt)
+        .laidOut(counts.select(col(uCol).as("u"), col(itCol).as("it"),
+          col(cCol).as("c")), "it", "pair_counts")
+      val ab = bucketed.df.select(col("u").as("u1"), col("it"),
+        col("c").as("c1"))
+      val bb = bucketed.df.select(col("u").as("u2"), col("it"),
+        col("c").as("c2"))
       // merge hint: the planner otherwise broadcasts the (small-looking)
       // b side and REBUILDS that broadcast in every chunk job — n hash
       // builds of the full counts frame; the bucketed sort-merge join is
@@ -120,19 +117,15 @@ object ChunkedPairs {
         .groupBy(col("u1"), col("u2"))
         .agg(sum(col("c1") * col("c2")).as("dot")))
       val route = pmod(xxhash64(col("u1")), lit(chunks))
-      val paths = (0 until chunks).map { i =>
+      // partials are plain parquet; the bucketed table serves only the
+      // (eager) chunk jobs, so it is released once they have landed
+      val paths = try (0 until chunks).map { i =>
         val path = s"$dir/chunk_$i"
         aggBk(ab.filter(route === i))
           .write.mode("overwrite").parquet(path)
         path
-      }
-      // partials are plain parquet; the bucketed scratch table served
-      // only the (eager) chunk jobs above
-      spark.sql(
-        s"DROP TABLE IF EXISTS ${graft.core.Bucketing.quoted(tbl)}")
+      } finally bucketed.release()
       ParquetFooters.read(spark, paths: _*)
     }
   }
-
-  private val tableSeq = new java.util.concurrent.atomic.AtomicLong(0)
 }

@@ -52,6 +52,12 @@ trait SparkSpec extends AnyFunSuite {
     (df, left, read)
   }
 
+  /** Names of the `graft_*` catalog tables the session holds now: equal
+    * before and after a call that released every table it placed. */
+  def graftTables: Set[String] =
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_")).toSet
+
   /** Jobs started by `body` on this thread. A marker job follows it: the
     * listener bus delivers events in order, so once the marker's start is
     * seen, every job `body` started has been seen too. */

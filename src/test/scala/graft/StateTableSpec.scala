@@ -13,10 +13,6 @@ class StateTableSpec extends SparkSpec {
 
   private val tabled4 = StateTable.Regime(tabled = true, width = 4)
 
-  private def graftTables: Set[String] =
-    spark.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith("graft_")).toSet
-
   test("pinOrStage below the gate pins (no surviving stage files) and " +
     "release unpins") {
     val df = (1L to 100L).map(i => (i, i % 7)).toDF("k", "v")

@@ -244,6 +244,44 @@ class ApiSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS api_bkt_listens")
   }
 
+  test("a deletion stales the bucketed projection even when the deletion " +
+      "tree's directory reports modification time 0") {
+    val root = tmpDir("api-bkt-mtime")
+    val store = new ListenStore(spark, root)
+    val ls = (1 to 60).map(i => listen(i % 7, s"Artist${i % 5}",
+      f"2024-01-${i % 28 + 1}%02d 10:00:00", Some(Seq(s"m${i % 5}")),
+      msid = s"msid-$i"))
+    store.writeBase(listensDf(ls))
+    def request(over: ListenStore) = {
+      val d = new Dispatch(spark, over,
+        new IncrementalStatsEngine(spark, tmpDir("api-bkt-mtime-work")))
+      d.handle(d.StatRequest("stats.user.entity", entity = "artist_name",
+        statsRange = "all_time")).collect().map(_.toString).sorted.toSeq
+    }
+    store.materializeUserBucketed("api_bkt_mtime",
+      tmpDir("api-bkt-mtime-proj"), buckets = 4)
+    assert(store.userBucketed.isDefined)
+    val before = request(store)
+
+    // an object store reports a directory's modification time as 0
+    val gone = ls.head
+    store.appendDeleted(listensDf(Seq(gone))
+      .select(Listen.deletionKey.map(col): _*))
+    val dir = new org.apache.hadoop.fs.Path(s"$root/deleted-listens")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.setTimes(dir, 0L, -1L)
+    assert(fs.getFileStatus(dir).getModificationTime == 0L)
+    assert(store.userBucketed.isEmpty, "a deletion stales the projection")
+
+    // the answer is the engine path's over the surviving listens
+    val survivors = new ListenStore(spark, tmpDir("api-bkt-mtime-want"))
+    survivors.writeBase(listensDf(ls.tail))
+    val want = request(survivors)
+    assert(want != before, "the deleted listen moves the answer")
+    assert(request(store) == want)
+    spark.sql("DROP TABLE IF EXISTS api_bkt_mtime")
+  }
+
   test("ChunkedRunner equals unchunked run for associative providers") {
     val ls = (1 to 50).map(i => listen(i % 7, s"Artist${i % 5}",
       f"2024-01-${i % 28 + 1}%02d 10:00:00"))

@@ -131,7 +131,7 @@ class ListenStoreSpec extends SparkSpec {
 
     // a BACKFILL import: listened_at AND created both before the stored
     // high-water, so the (maxListened, maxCreated) pair does not move —
-    // the updated_at stamp is what must stale the projection
+    // the incremental part file it lands is what must stale the projection
     store.appendIncremental(listensDf(Seq(
       listen(1, "Old", "2023-01-01 10:00:00",
         created = "2023-01-02 00:00:00"))))
@@ -142,8 +142,9 @@ class ListenStoreSpec extends SparkSpec {
       "bkt_fresh_listens", tmpDir("bkt-fresh-proj2"), buckets = 2)
     assert(store.userBucketed.isDefined)
 
-    // deletion → stale (mtime); compaction folds it in, restamps metadata
-    // → STILL stale even though the deletion side-tables are now gone
+    // deletion → stale (a new deletion file); compaction folds it in and
+    // rewrites the base → STILL stale even though the deletion side-tables
+    // are now gone
     store.appendDeleted(listensDf(Seq(
       listen(2, "B", "2024-06-02 10:00:00"))))
     assert(store.userBucketed.isEmpty, "deletion stales the projection")
@@ -158,5 +159,21 @@ class ListenStoreSpec extends SparkSpec {
     assert(proj.filter(col("artist_name") === "B").count() == 0 &&
       proj.count() == 2, "re-materialized projection excludes the deletion")
     spark.sql("DROP TABLE IF EXISTS bkt_fresh_listens")
+  }
+
+  test("a projection record without a file list reads as stale") {
+    val root = tmpDir("bkt-legacy")
+    val store = new ListenStore(spark, root)
+    store.writeBase(listensDf(Seq(listen(1, "A", "2024-06-01 10:00:00"))))
+    val path = tmpDir("bkt-legacy-proj")
+    val proj = store.materializeUserBucketed(
+      "bkt_legacy_listens", path, buckets = 2)
+    assert(store.userBucketed.isDefined)
+    import spark.implicits._
+    Seq(("bkt_legacy_listens", path, 2, proj.schema.toDDL))
+      .toDF("table", "path", "buckets", "schema_ddl")
+      .write.mode("overwrite").json(s"$root/bucketed-meta")
+    assert(store.userBucketed.isEmpty)
+    spark.sql("DROP TABLE IF EXISTS bkt_legacy_listens")
   }
 }

@@ -16,10 +16,6 @@ class GraphResidueSpec extends SparkSpec {
   private val edges = Seq((1L, 2L, 3L), (2L, 3L, 5L), (3L, 4L, 4L),
     (4L, 5L, 9L), (2L, 6L, 1L), (10L, 11L, 2L)).toDF("s", "d", "t")
 
-  private def graftTables: Set[String] =
-    spark.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith("graft_")).toSet
-
   private def calls(gate: Long): Seq[(String, () => DataFrame)] = Seq(
     "Bfs" -> (() => Bfs.distances(edges, "s", "d",
       Seq(1L).toDF("node"), 3, tableStateRows = gate)),

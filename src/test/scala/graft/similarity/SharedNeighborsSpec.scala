@@ -70,4 +70,21 @@ class SharedNeighborsSpec extends SparkSpec {
     // 100,1), then the lowest-id shared-1 dense user via item 1
     assert(got(20L).map(_._2).toSet == Set(21L, 30L, 1L))
   }
+
+  test("a chunked dots call leaves no catalog table and no bucket files; " +
+      "its answer reads only the chunk partials") {
+    val counts = presence.withColumn("c", lit(1L))
+      .transform(graft.core.StateTable.pin)
+    def pairs(chunks: Int) =
+      ChunkedPairs.dots(counts, "user_id", "item_id", "c", chunks)
+    val want = pairs(1).collect().map(_.toString).sorted.toSeq
+    val tables = graftTables
+    val scratch = graft.core.TempWork.snapshot()
+    val got = pairs(4)
+    assert(graftTables === tables)
+    val made = graft.core.TempWork.snapshot() -- scratch
+    assert(made.nonEmpty && made.forall(_.startsWith("pair-chunks-")),
+      s"only the chunk partials' dir may survive the call: $made")
+    assert(got.collect().map(_.toString).sorted.toSeq == want)
+  }
 }
