@@ -7,7 +7,10 @@ import org.apache.spark.storage.StorageLevel
 /** The engine's one placement module. Callers see gates, not
   * mechanisms: [[pin]]/[[unpin]] for small multiply-consumed frames,
   * [[pinOrStage]] for one size-gated placement, and [[regime]] for a
-  * round loop's pinned-or-tabled state.
+  * round loop's pinned-or-tabled state. Both gates compare state rows
+  * against ONE deployment setting, the session conf [[GateRowsKey]]
+  * (default [[DefaultGateRows]]; 0 tables every placement), read in one
+  * place ([[gateRows]]) — never a per-call parameter.
   *
   * Why placement is a GATE and not a constant: a corpus-sized block pin
   * ([[pin]]) is a CLUSTER-STORAGE budget with a hard failure mode — the
@@ -60,9 +63,24 @@ object StateTable {
   /** Default placement gate, in measured (or upper-bound) state rows —
     * the RandomWalks constant: 16M adjacency rows is ~the point where
     * the pinned working set starts to rival a production executor's
-    * storage share. Operators expose it as a parameter so specs can
-    * force the tabled regime on toy graphs. */
+    * storage share. */
   val DefaultGateRows: Long = 16L * 1000 * 1000
+
+  /** The session conf holding the placement gate, a non-negative row
+    * count (OPERATIONS.md §4a sizes it for a cluster). Spark copies
+    * `-Dspark.*` system properties into the session conf, so one JVM
+    * flag sets it for a whole main; 0 forces the tabled regime
+    * everywhere. */
+  val GateRowsKey = "spark.graft.stateTable.gateRows"
+
+  /** The session's placement gate: [[GateRowsKey]], else
+    * [[DefaultGateRows]]. */
+  private def gateRows(spark: SparkSession): Long = {
+    val raw = spark.conf.get(GateRowsKey, DefaultGateRows.toString)
+    raw.trim.toLongOption.filter(_ >= 0L).getOrElse(
+      throw new IllegalArgumentException(
+        s"$GateRowsKey must be a non-negative row count, got '$raw'"))
+  }
 
   /** Lineage-truncating materialization for multiply-consumed frames.
     *
@@ -161,10 +179,10 @@ object StateTable {
 
   /** The size-gated placement primitive, ONE plan execution total:
     * land `df` to a parquet stage, counting its rows in the write job,
-    * then place — below `gateRows`, re-pin from the stage at the
-    * measured width on `keys` and delete the stage (executor storage,
-    * fastest re-reads — [[pinAt]]); at or above, keep the staged scan
-    * (local disk; executor storage holds nothing).
+    * then place — below the session's [[gateRows]], re-pin from the
+    * stage at the measured width on `keys` and delete the stage
+    * (executor storage, fastest re-reads — [[pinAt]]); at or above, keep
+    * the staged scan (local disk; executor storage holds nothing).
     *
     * Why stage-first instead of count-then-decide: a count job would
     * execute `df`'s plan once EXTRA (for a pair-join-derived edge set,
@@ -190,23 +208,22 @@ object StateTable {
     * unchanged. */
   def pinOrStage(
       df: DataFrame, keys: Seq[org.apache.spark.sql.Column],
-      prefix: String, gateRows: Long = DefaultGateRows,
-      rowsPerTask: Long = 500000L, upperBoundRows: Long = -1L): Placed = {
+      prefix: String, upperBoundRows: Long = -1L): Placed = {
     val spark = df.sparkSession
+    val gate = gateRows(spark)
     // width from the bound: true rows ≤ bound < gate, so per-task frames
     // stay bounded; below the gate the measured width is the session
-    // width anyway (gate/rowsPerTask ≈ session cores), so a
+    // width anyway (gate / 500k rows per task ≈ session cores), so a
     // loose-but-sound bound cannot over- or under-width the pin
-    if (upperBoundRows >= 0 && upperBoundRows < gateRows)
-      return pinAt(df, keys, measuredWidth(spark, upperBoundRows, rowsPerTask))
+    if (upperBoundRows >= 0 && upperBoundRows < gate)
+      return pinAt(df, keys, measuredWidth(spark, upperBoundRows))
     val first = math.max(
       spark.sessionState.conf.numShufflePartitions * 16, 256)
     val stage = ScopedConf.withShufflePartitions(spark, first) {
       staged(df, prefix)
     }
-    if (stage.rows < gateRows) {
-      val p = pinAt(
-        stage.df, keys, measuredWidth(spark, stage.rows, rowsPerTask))
+    if (stage.rows < gate) {
+      val p = pinAt(stage.df, keys, measuredWidth(spark, stage.rows))
       // the pin is eager and lineage-truncated — the stage has no reader
       stage.release()
       p
@@ -267,14 +284,12 @@ object StateTable {
   }
 
   /** The regime for a call whose state is bounded by `rows`: tabled at
-    * or above `gateRows`, at the [[measuredWidth]] of `rows` either way.
-    * Callers pass an upper bound (a pre-distinct or 2× count): an
-    * over-estimate tables early and widens the exchanges — slower,
-    * never wrong. */
-  def regime(
-      spark: SparkSession, rows: Long, gateRows: Long,
-      rowsPerTask: Long): Regime =
-    Regime(rows >= gateRows, measuredWidth(spark, rows, rowsPerTask))
+    * or above the session's [[gateRows]], at the [[measuredWidth]] of
+    * `rows` either way. Callers pass an upper bound (a pre-distinct or
+    * 2× count): an over-estimate tables early and widens the exchanges
+    * — slower, never wrong. */
+  def regime(spark: SparkSession, rows: Long): Regime =
+    Regime(rows >= gateRows(spark), measuredWidth(spark, rows))
 
   /** `df` pinned as is, its rows counted by the pin's own job. */
   private def pinned(df: DataFrame): Placed = {

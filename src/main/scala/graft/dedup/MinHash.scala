@@ -144,9 +144,7 @@ object MinHash {
   def nearDuplicates(
       docs: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, numPerms: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
-      : DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     // The batch path gets the SAME treatment the incremental path earned
     // at 30×/100× (see incrementalNearDuplicates): the round-10 100×
     // probe killed this path with "Not enough memory to build and
@@ -158,8 +156,8 @@ object MinHash {
     // and scope the verify width from the MEASURED candidate ×
     // avg-shingle volume.
     //
-    // Placement is the size gate (StateTable.pinOrStage): below
-    // `tableStateRows` both frames block-pin exactly as before; at or
+    // Placement is the size gate (StateTable.pinOrStage): below the
+    // session's gate both frames block-pin exactly as before; at or
     // above, they stay local-disk parquet stages — the corpus-sized
     // shingle pin was the q46 4 GiB-tier storage-budget OOM (SCALE.md
     // round 12), and the verify consumers shuffle on their own keys
@@ -167,12 +165,11 @@ object MinHash {
     val spark = docs.sparkSession
     val sh = graft.core.StateTable.pinOrStage(
       shingles(docs, idCol, textCol, shingleLen), Seq(col(idCol)),
-      "mh_shingles", gateRows = tableStateRows)
+      "mh_shingles")
     val sigs = signatures(sh.df, idCol, numPerms)
     val cands = graft.core.StateTable.pinOrStage(
       candidates(sigs, idCol, numPerms, bands),
-      Seq(col("id_a"), col("id_b")), "mh_cands",
-      gateRows = tableStateRows)
+      Seq(col("id_a"), col("id_b")), "mh_cands")
     // widths from the placements' own measured counts (Placed.rows) —
     // the three width inputs used to be three more count jobs
     val nCands = cands.rows
@@ -211,9 +208,7 @@ object MinHash {
       newDocs: DataFrame, corpusDocs: DataFrame, corpusBuckets: DataFrame,
       idCol: String, textCol: String,
       shingleLen: Int = 3, numPerms: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, maxBucketSize: Int = 1000,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
-      : DataFrame = {
+      threshold: Double = 0.5, maxBucketSize: Int = 1000): DataFrame = {
     val newSh = shingles(newDocs, idCol, textCol, shingleLen)
     val newBuckets = buckets(
       signatures(newSh, idCol, numPerms), idCol, numPerms, bands)
@@ -226,8 +221,7 @@ object MinHash {
     val cands0 = graft.core.StateTable.pinOrStage(
       incrementalCandidates(
         newBuckets, corpusBuckets, idCol, maxBucketSize),
-      Seq(col("id_a"), col("id_b")), "mh_inc_cands",
-      gateRows = tableStateRows)
+      Seq(col("id_a"), col("id_b")), "mh_inc_cands")
     val cands = cands0.df
     val touched = cands.select(col("id_a").as(idCol))
       .unionByName(cands.select(col("id_b").as(idCol))).distinct()
@@ -246,14 +240,14 @@ object MinHash {
         corpusDocs.join(touched, Seq(idCol), "left_semi"),
         idCol, textCol, shingleLen)
         .unionByName(newSh.join(touched, Seq(idCol), "left_semi")),
-      Seq(col(idCol)), "mh_inc_sh", gateRows = tableStateRows)
+      Seq(col(idCol)), "mh_inc_sh")
     val candSh = candSh0.df
     // Scope the verify width from the MEASURED pair volume (all three
     // counts are cached scans over the pins): the inter join streams
     // ≈ candidates × per-doc shingle rows, and a fixed session width
     // puts that whole stream's sort frames on a handful of tasks — the
     // 100× probe OOM'd an 8 GiB heap exactly there. Same discipline as
-    // LabelPropagation/TemporalBfs: width = measured rows / rowsPerTask,
+    // LabelPropagation/TemporalBfs: width = measured rows / rows per task,
     // AQE coalesces the small post-aggregate sides back down.
     val spark = newDocs.sparkSession
     val nCands = cands0.rows // placement-measured — no re-count job

@@ -39,7 +39,8 @@ object Bfs {
     * upper bound 2 × input rows ([[graft.core.StateTable.regime]]): the
     * per-hop shuffle width is its measured width (the 100× probe OOM'd
     * the fixed session width on the frontier⋈edges hop exactly as q272
-    * did), and below `tableStateRows` the adjacency pins hash-partitioned
+    * did), and below the session's placement gate
+    * ([[graft.core.StateTable.GateRowsKey]]) the adjacency pins hash-partitioned
     * and sorted on the join key while each hop's `(node, dist)` frontier
     * pins; at or above it the adjacency becomes an `a`-bucketed parquet
     * table (each hop join gets an exchange-free scan side) and each hop
@@ -59,16 +60,12 @@ object Bfs {
     */
   def distances(
       edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, maxHops: Int,
-      rowsPerTask: Long = 500000L,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
-      : DataFrame = {
+      seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 64,
       s"maxHops must be in [0,64], got $maxHops")
-    require(rowsPerTask >= 1, s"rowsPerTask must be >= 1, got $rowsPerTask")
     val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
     val regime = graft.core.StateTable.regime(
-      edges.sparkSession, 2L * e0.count(), tableStateRows, rowsPerTask)
+      edges.sparkSession, 2L * e0.count())
     val adj = regime.laidOut(
       e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
         .distinct(),

@@ -61,10 +61,8 @@ object KCore {
     * this one with a flag. */
   def core(
       edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int = 4,
-      tableStateRows: Long = StateTable.DefaultGateRows)
-      : DataFrame =
-    peel(edges, srcCol, dstCol, k, rounds, strict = true, tableStateRows)
+      k: Int, rounds: Int = 4): DataFrame =
+    peel(edges, srcCol, dstCol, k, rounds, strict = true)
 
   /** The bounded-peel variant: up to `rounds` degree-threshold passes,
     * returning whatever survives — by construction a SUPERGRAPH of the
@@ -74,15 +72,12 @@ object KCore {
     * certifies the fixpoint and throws rather than under-deliver. */
   def boundedPeel(
       edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int = 4,
-      tableStateRows: Long = StateTable.DefaultGateRows)
-      : DataFrame =
-    peel(edges, srcCol, dstCol, k, rounds, strict = false, tableStateRows)
+      k: Int, rounds: Int = 4): DataFrame =
+    peel(edges, srcCol, dstCol, k, rounds, strict = false)
 
   private def peel(
       edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int, strict: Boolean,
-      tableStateRows: Long): DataFrame = {
+      k: Int, rounds: Int, strict: Boolean): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 64,
       s"rounds must be in [1,64], got $rounds")
@@ -105,7 +100,7 @@ object KCore {
     // against each other).
     var e = StateTable.pinOrStage(
       und.unionByName(und.select(col("b").as("a"), col("a").as("b"))),
-      Seq(col("a")), "kcore", gateRows = tableStateRows)
+      Seq(col("a")), "kcore")
     // every round's edge count is its placement's own measurement (the
     // pin or table write counts what it lands); edge count unchanged ⟺
     // the round's keep filter dropped nobody ⟺ fixpoint (0 edges is
@@ -117,7 +112,7 @@ object KCore {
       // the gate is re-checked every round from the observed prev, and
       // the surviving edge set is bounded by prev — that measured width
       // keeps round-R+1 blocks/buckets re-read-sized with no extra count
-      val regime = StateTable.regime(spark, prev, tableStateRows, 500000L)
+      val regime = StateTable.regime(spark, prev)
       val keepBase = e.df.groupBy(col("a")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k).select(col("a"))
       // keep is consumed by both endpoint semi-joins: below the gate it

@@ -45,15 +45,16 @@ object LabelPropagation {
     * the dedup runs twice — a scan-shuffle-count, far cheaper than
     * holding an extra materialized copy across every round). The
     * per-round shuffle width is its measured width — ceil(edges /
-    * rowsPerTask), clamped to [session width, 4096]. A fixed session
+    * 500k), clamped to [session width, 4096]. A fixed session
     * width is the per-task memory cliff: at the 4 GiB production share
     * on 30× data, width 4 put a 7.5M-row sort frame in each label-join
     * task and OOM'd; the measured width bounds every task's
-    * join/aggregate frame by rowsPerTask regardless of graph size. AQE
+    * join/aggregate frame by 500k rows regardless of graph size. AQE
     * coalesces the small post-aggregate sides back down.
     *
-    * The adjacency is laid out on the join key ONCE — below
-    * `tableStateRows` hash-partitioned and sorted within partitions,
+    * The adjacency is laid out on the join key ONCE — below the
+    * session's placement gate ([[graft.core.StateTable.GateRowsKey]])
+    * hash-partitioned and sorted within partitions,
     * then pinned; at or above it an nbr-bucketed, bucket-sorted parquet
     * table whose scans are exchange-free on `nbr`. Labels land once per
     * round (a pin, or a parquet dir at or above the gate), the
@@ -63,19 +64,16 @@ object LabelPropagation {
     * other). */
   def communities(
       edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int, rowsPerTask: Long = 500000L,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
-      : DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 64,
       s"rounds must be in [1,64], got $rounds")
-    require(rowsPerTask >= 1, s"rowsPerTask must be >= 1, got $rowsPerTask")
     val ed = edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
     val regime = graft.core.StateTable.regime(
-      edges.sparkSession, 2L * ed.count(), tableStateRows, rowsPerTask)
+      edges.sparkSession, 2L * ed.count())
     val adj = regime.laidOut(
       ed.select(col("a").as("node"), col("b").as("nbr"))
         .unionAll(ed.select(col("b").as("node"), col("a").as("nbr"))),

@@ -31,9 +31,7 @@ object MassRank {
   def rank(
       edges: DataFrame, srcCol: String, dstCol: String,
       initMass: Long = 1000000L, dampNum: Int = 85, dampDen: Int = 100,
-      iters: Int = 3,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
-      : DataFrame = {
+      iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"damping must satisfy 0 <= num <= den, got $dampNum/$dampDen")
@@ -48,7 +46,7 @@ object MassRank {
     // (the frontier class) and keep their pins in both regimes.
     val eP = graft.core.StateTable.pinOrStage(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
-      Seq(col("src")), "massrank_e", gateRows = tableStateRows)
+      Seq(col("src")), "massrank_e")
     val e = eP.df
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("od"))
       .transform(graft.core.StateTable.pin)

@@ -67,7 +67,9 @@ object RandomWalks {
     * Placement and width come from ONE measured count, the raw
     * (pre-distinct) edge rows ([[graft.core.StateTable.regime]]): the
     * adjacency and every step join run at its measured width, and
-    * below `tableStateRows` the adjacency and per-step frontiers are
+    * below the session's placement gate
+    * ([[graft.core.StateTable.GateRowsKey]]) the adjacency and per-step
+    * frontiers are
     * block-pinned ([[graft.core.StateTable.pin]] — fastest re-scan,
     * zero disk round-trips); at or above it they become TABLES (a node-bucketed
     * adjacency + one parquet dir per step). The gate exists because a
@@ -92,15 +94,11 @@ object RandomWalks {
     * walk table reads only the steps. */
   def walks(
       edges: DataFrame, srcCol: String, dstCol: String,
-      walksPerNode: Int, length: Int,
-      rowsPerTask: Long = 500000L,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
-      : DataFrame = {
+      walksPerNode: Int, length: Int): DataFrame = {
     require(walksPerNode >= 1, s"walksPerNode must be >= 1")
     require(length >= 1, s"length must be >= 1")
-    require(rowsPerTask >= 1, s"rowsPerTask must be >= 1, got $rowsPerTask")
-    val regime = graft.core.StateTable.regime(
-      edges.sparkSession, edges.count(), tableStateRows, rowsPerTask)
+    val regime =
+      graft.core.StateTable.regime(edges.sparkSession, edges.count())
     val adj = regime.laidOut(
       neighborIndex(edges, srcCol, dstCol), "node", "walk_adj")
     // step 0: walksPerNode walks from every node with an out-edge

@@ -40,7 +40,8 @@ object TemporalBfs {
     * per-task memory cliff here — at width 32 each task of the
     * frontier⋈edges round held a multi-million-row slice of the
     * 100M-row directed adjacency (plus the pinned block it re-reads)
-    * and OOM'd an 8 GiB heap. Below `tableStateRows` the adjacency is
+    * and OOM'd an 8 GiB heap. Below the session's placement gate
+    * ([[graft.core.StateTable.GateRowsKey]]) the adjacency is
     * hash-partitioned on the join key and sorted ONCE before its pin,
     * and each round's merged `(node, arrival, improved)` frame pins; at
     * or above it the adjacency is an `a`-bucketed, bucket-sorted parquet
@@ -58,17 +59,13 @@ object TemporalBfs {
     */
   def earliestArrival(
       edges: DataFrame, srcCol: String, dstCol: String, ts: String,
-      seeds: DataFrame, maxHops: Int,
-      rowsPerTask: Long = 500000L,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
-      : DataFrame = {
+      seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 64,
       s"maxHops must be in [0,64], got $maxHops")
-    require(rowsPerTask >= 1, s"rowsPerTask must be >= 1, got $rowsPerTask")
     val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
       col(ts).cast("long").as("ets"))
     val regime = graft.core.StateTable.regime(
-      edges.sparkSession, 2L * e0.count(), tableStateRows, rowsPerTask)
+      edges.sparkSession, 2L * e0.count())
     val adj = regime.laidOut(
       e0.unionByName(
           e0.select(col("b").as("a"), col("a").as("b"), col("ets")))

@@ -55,11 +55,8 @@ object Triangles {
   /** Per-node triangle participation counts `(node, n_triangles)` —
     * every node of each triangle credited once; triangle-free nodes
     * absent. */
-  def perNode(
-      edges: DataFrame, src: String, dst: String,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
-      : DataFrame =
-    triangles(edges, src, dst, tableStateRows = tableStateRows)
+  def perNode(edges: DataFrame, src: String, dst: String): DataFrame =
+    triangles(edges, src, dst)
       // explode, not 3 unions: one pass over the triangle set
       .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
@@ -68,7 +65,7 @@ object Triangles {
     * passes ([[trianglesOfCanonical]] consumes it in five plan
     * positions; q217 runs the exact count AND the sampled estimate over
     * the same frame). Placement is the size gate
-    * ([[graft.core.StateTable.pinOrStage]]): below `tableStateRows`
+    * ([[graft.core.StateTable.pinOrStage]]): below the session's gate
     * the set block-pins at the measured width (the fastest re-scan);
     * at or above, it stays a local-disk parquet stage — a corpus-sized
     * block pin is a cluster-storage budget with an unrecoverable
@@ -78,12 +75,10 @@ object Triangles {
     * exchange. Exactly one execution of the (often pair-join-derived,
     * expensive) upstream plan either way. */
   def materializeCanonical(
-      edges: DataFrame, src: String, dst: String,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
+      edges: DataFrame, src: String, dst: String)
       : graft.core.StateTable.Placed =
     graft.core.StateTable.pinOrStage(
-      canonical(edges, src, dst), Seq(col("a"), col("b")),
-      "tri_canon", gateRows = tableStateRows)
+      canonical(edges, src, dst), Seq(col("a"), col("b")), "tri_canon")
 
   /** DOULION edge-sampled triangle estimate (Tsourakakis, Kang &
     * Faloutsos, KDD'09) — the 100 TB regime's answer when even the
@@ -106,9 +101,7 @@ object Triangles {
   def doulion(
       edges: DataFrame, src: String, dst: String,
       keepHex: Int = 8, salt: String = "doulion",
-      maxBloomEdges: Long = 4000000L,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
-      : DataFrame = {
+      maxBloomEdges: Long = 4000000L): DataFrame = {
     require(Set(1, 2, 4, 8, 16).contains(keepHex),
       s"keepHex must divide 16 for an integer-exact estimator, got $keepHex")
     val c = canonical(edges, src, dst)
@@ -123,7 +116,7 @@ object Triangles {
     // the q217 4 GiB-tier pin class).
     val sampled = graft.core.StateTable.pinOrStage(
       c.filter(coin.isin(keep: _*)), Seq(col("a"), col("b")),
-      "tri_doulion", gateRows = tableStateRows)
+      "tri_doulion")
     trianglesOfCanonical(sampled.df, sampled.rows, maxBloomEdges)
       .agg(count(lit(1)).as("sampled_triangles"))
       .select(col("sampled_triangles"),
@@ -136,15 +129,13 @@ object Triangles {
     * step: semi-check the third edge against the oriented edge set. */
   def triangles(
       edges: DataFrame, src: String, dst: String,
-      maxBloomEdges: Long = 4000000L,
-      tableStateRows: Long = graft.core.StateTable.DefaultGateRows)
-      : DataFrame = {
+      maxBloomEdges: Long = 4000000L): DataFrame = {
     // the edge set feeds FIVE plan positions (degrees twice, both wedge
     // sides, the close); materialize canonical once instead of
     // re-deriving the upstream pair join per consumer — size-gated
     // placement (pin below the gate, local-disk stage above; see
     // materializeCanonical)
-    val cP = materializeCanonical(edges, src, dst, tableStateRows)
+    val cP = materializeCanonical(edges, src, dst)
     trianglesOfCanonical(cP.df, cP.rows, maxBloomEdges)
   }
 
@@ -164,8 +155,7 @@ object Triangles {
     * contract). Callers must build the frame ONCE and reuse it;
     * constructing it twice redoes and double-stores the full close. */
   def trianglesOfCanonical(
-      c: DataFrame, m: Long, maxBloomEdges: Long = 4000000L,
-      rowsPerTask: Long = 500000L): DataFrame = {
+      c: DataFrame, m: Long, maxBloomEdges: Long = 4000000L): DataFrame = {
     val spark = c.sparkSession
     // measured widths (the Bfs/LabelPropagation discipline, applied here
     // after the round-10 100× probe OOM'd the fixed session width on the
@@ -188,8 +178,7 @@ object Triangles {
     // pins directly with no stage round-trip (pinOrStage
     // upperBoundRows contract).
     val oP = graft.core.StateTable.pinOrStage(
-      orient(c), Seq(col("u")), "tri_oriented",
-      rowsPerTask = rowsPerTask, upperBoundRows = m)
+      orient(c), Seq(col("u")), "tri_oriented", upperBoundRows = m)
     val o = oP.df
     val wedgeTerms = {
       val r = o.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -197,8 +186,8 @@ object Triangles {
         .head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    val wedgeWidth = graft.core.StateTable.measuredWidth(
-      spark, math.max(m, wedgeTerms), rowsPerTask)
+    val wedgeWidth =
+      graft.core.StateTable.measuredWidth(spark, math.max(m, wedgeTerms))
     // Out-of-core regime (round-10 100×, measured 4.1B wedges over
     // 119.6M edges): ONE exchange carrying the whole wedge volume is
     // tens of GB of shuffle write plus an equal sort on the read side —
@@ -229,8 +218,8 @@ object Triangles {
       // deleting it halves the chunked regime's peak disk footprint)
       oP.release()
       val oAll = ParquetFooters.read(spark, s"$dir/oriented")
-      val chunkWidth = graft.core.StateTable.measuredWidth(
-        spark, wedgeTerms / nChunks, rowsPerTask)
+      val chunkWidth =
+        graft.core.StateTable.measuredWidth(spark, wedgeTerms / nChunks)
       (0 until nChunks).foreach { i =>
         trianglesWedgeClose(
             c, oAll.filter(col("ck") === i).drop("ck"),

@@ -16,7 +16,7 @@ package graft.streaming
   * OPTIMIZATION_r13.md) the commit storm IS the runtime of every
   * replayed stateful oracle. Sizing the width from measured rows keeps
   * per-task state bounded at scale — 100× replays land at the same
-  * ~rows/rowsPerTask width they ran at before this change — while the
+  * ~rows/500k width they ran at before this change — while the
   * fixed commit overhead collapses at small volume: state-store
   * instances should track state volume, never idle cores.
   *
@@ -29,12 +29,10 @@ package graft.streaming
   */
 object StreamScale {
 
-  /** ceil(rows / rowsPerTask), clamped to [1, 4096] — deliberately NO
+  /** ceil(rows / 500k), clamped to [1, 4096] — deliberately NO
     * session-width floor (unlike StateTable.measuredWidth): a batch
     * stage wants the cores busy, a state store wants to exist only
     * where state lives. */
-  def width(rows: Long, rowsPerTask: Long = 500000L): Int = {
-    val r = math.max(1L, rowsPerTask)
-    math.max(1L, math.min(4096L, (rows + r - 1) / r)).toInt
-  }
+  def width(rows: Long): Int =
+    math.max(1L, math.min(4096L, (rows + 499999L) / 500000L)).toInt
 }

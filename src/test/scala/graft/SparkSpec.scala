@@ -58,6 +58,16 @@ trait SparkSpec extends AnyFunSuite {
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_")).toSet
 
+  /** `body` run with the session's placement gate
+    * ([[graft.core.StateTable.GateRowsKey]]) at `rows` — 0 forces the
+    * tabled regime — and the previous setting restored afterwards. */
+  def withGate[T](rows: Long)(body: => T): T = {
+    val key = graft.core.StateTable.GateRowsKey
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, rows)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Jobs started by `body` on this thread. A marker job follows it: the
     * listener bus delivers events in order, so once the marker's start is
     * seen, every job `body` started has been seen too. */

@@ -16,8 +16,8 @@ class StateTableSpec extends SparkSpec {
   test("pinOrStage below the gate pins (no surviving stage files) and " +
     "release unpins") {
     val df = (1L to 100L).map(i => (i, i % 7)).toDF("k", "v")
-    val placed = StateTable.pinOrStage(df, Seq(col("k")), "sts_small",
-      gateRows = 1000L)
+    val placed = withGate(1000L)(
+      StateTable.pinOrStage(df, Seq(col("k")), "sts_small"))
     // pinned form: lineage-truncated LogicalRDD, rows intact
     assert(placed.df.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
@@ -30,8 +30,8 @@ class StateTableSpec extends SparkSpec {
   test("pinOrStage at/above the gate stages to parquet (scan, not pin) " +
     "and release deletes the tree") {
     val df = (1L to 100L).map(i => (i, s"x$i")).toDF("k", "s")
-    val placed = StateTable.pinOrStage(df, Seq(col("k")), "sts_big",
-      gateRows = 10L)
+    val placed = withGate(10L)(
+      StateTable.pinOrStage(df, Seq(col("k")), "sts_big"))
     assert(!placed.df.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
     val got = placed.df.as[(Long, String)].collect().toSet
@@ -50,7 +50,7 @@ class StateTableSpec extends SparkSpec {
     val df = (1L to 50L).toDF("k")
       .filter(udfTouch(counter)(col("k")))
     // staged branch: one write job over the plan, counts from metadata
-    val placed = StateTable.pinOrStage(df, Nil, "sts_once", gateRows = 1L)
+    val placed = withGate(1L)(StateTable.pinOrStage(df, Nil, "sts_once"))
     assert(placed.df.count() === 50L)
     assert(placed.df.count() === 50L) // second consumer: scan, no recompute
     assert(counter.value === 50L,
@@ -61,12 +61,12 @@ class StateTableSpec extends SparkSpec {
   test("pinOrStage reports the placement's measured row count in both " +
     "regimes") {
     val df = (1L to 80L).map(i => (i, i % 3)).toDF("k", "v")
-    val pinned = StateTable.pinOrStage(df, Seq(col("k")), "sts_rows_p",
-      gateRows = 1000L)
+    val pinned = withGate(1000L)(
+      StateTable.pinOrStage(df, Seq(col("k")), "sts_rows_p"))
     assert(pinned.rows === 80L)
     pinned.release()
-    val staged = StateTable.pinOrStage(df, Seq(col("k")), "sts_rows_s",
-      gateRows = 10L)
+    val staged = withGate(10L)(
+      StateTable.pinOrStage(df, Seq(col("k")), "sts_rows_s"))
     assert(staged.rows === 80L)
     staged.release()
   }
@@ -75,8 +75,8 @@ class StateTableSpec extends SparkSpec {
     "no stage round-trip, one upstream execution, exact rows") {
     val counter = spark.sparkContext.longAccumulator("sts_bound")
     val df = (1L to 60L).toDF("k").filter(udfTouch(counter)(col("k")))
-    val placed = StateTable.pinOrStage(df, Seq(col("k")), "sts_bound",
-      gateRows = 1000L, upperBoundRows = 100L)
+    val placed = withGate(1000L)(StateTable.pinOrStage(
+      df, Seq(col("k")), "sts_bound", upperBoundRows = 100L))
     // direct pin: lineage-truncated, no staged parquet scan behind it
     assert(placed.df.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
@@ -89,8 +89,8 @@ class StateTableSpec extends SparkSpec {
 
   test("pinOrStage ignores an at/above-gate upper bound and stages") {
     val df = (1L to 50L).map(i => (i, s"y$i")).toDF("k", "s")
-    val placed = StateTable.pinOrStage(df, Seq(col("k")), "sts_bound_big",
-      gateRows = 10L, upperBoundRows = 50L)
+    val placed = withGate(10L)(StateTable.pinOrStage(
+      df, Seq(col("k")), "sts_bound_big", upperBoundRows = 50L))
     assert(!placed.df.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
     assert(placed.rows === 50L)
@@ -131,8 +131,8 @@ class StateTableSpec extends SparkSpec {
       StateTable.unpin(StateTable.pin(df.repartition(4, col("k")))))
     var placed: StateTable.Placed = null
     val bound = jobsDuring {
-      placed = StateTable.pinOrStage(df, Seq(col("k")), "sts_jobs",
-        gateRows = 1000L, upperBoundRows = 100L)
+      placed = withGate(1000L)(StateTable.pinOrStage(
+        df, Seq(col("k")), "sts_jobs", upperBoundRows = 100L))
     }
     assert(bound === bare)
     assert(placed.rows === 60L)
@@ -148,10 +148,10 @@ class StateTableSpec extends SparkSpec {
       // empty only at run time: AQE replaces the join with an empty relation
       base.join(base.filter(col("v") > 10L).select(col("k")), Seq("k")))
     empties.foreach { df =>
-      val pinned = StateTable.pinOrStage(df, Seq(col("k")), "sts_empty_p",
-        gateRows = 1000L)
-      val staged = StateTable.pinOrStage(df, Seq(col("k")), "sts_empty_s",
-        gateRows = 0L)
+      val pinned = withGate(1000L)(
+        StateTable.pinOrStage(df, Seq(col("k")), "sts_empty_p"))
+      val staged = withGate(0L)(
+        StateTable.pinOrStage(df, Seq(col("k")), "sts_empty_s"))
       assert(!staged.df.queryExecution.analyzed
         .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
       val tabled = tabled4.laidOut(df, "k", "sts_empty_t")
@@ -176,10 +176,10 @@ class StateTableSpec extends SparkSpec {
 
   test("regime: one count sets the gate and the width, both regimes " +
     "count what they place, and the tabled join side is bucketed") {
-    // gate 1000, 100 rows per task: 100 rows pin at the session width,
-    // 1000 rows table at ten buckets
-    val pinned = StateTable.regime(spark, 100L, 1000L, 100L)
-    val tabled = StateTable.regime(spark, 1000L, 1000L, 100L)
+    // gate 1000, 500k rows per task: 100 rows pin at the session
+    // width, 5M rows table at ten buckets
+    val (pinned, tabled) = withGate(1000L)(
+      (StateTable.regime(spark, 100L), StateTable.regime(spark, 5000000L)))
     assert(!pinned.tabled && pinned.width === 4)
     assert(tabled.tabled && tabled.width === 10)
     val df = (1L to 200L).map(i => (i % 20, i)).toDF("g", "v")
@@ -193,6 +193,20 @@ class StateTableSpec extends SparkSpec {
         side.df.groupBy(col("g")).agg(sum(col("v")))))
       side.release()
       step.release()
+    }
+  }
+
+  test("a negative or non-numeric gate fails the placement, naming the " +
+    "setting") {
+    val df = (1L to 5L).toDF("k")
+    for (bad <- Seq("-1", "16M")) {
+      spark.conf.set(StateTable.GateRowsKey, bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          StateTable.pinOrStage(df, Nil, "sts_bad_gate"))
+        assert(e.getMessage.contains(StateTable.GateRowsKey), bad)
+        intercept[IllegalArgumentException](StateTable.regime(spark, 5L))
+      } finally spark.conf.unset(StateTable.GateRowsKey)
     }
   }
 

@@ -163,18 +163,16 @@ class DedupSpec extends SparkSpec {
     assert(inc.contains((10L, 12L)), "batch-internal pair found")
     assert(!inc.exists { case (a, b) => a < 10 && b < 10 },
       "no corpus x corpus pair is ever regenerated")
-    // tabled regime (tableStateRows = 1 forces staged shingle/candidate
-    // state): output-identical on both the batch and incremental paths
-    val incT = MinHash.incrementalNearDuplicates(
+    // tabled regime (gate 1 forces staged shingle/candidate state):
+    // output-identical on both the batch and incremental paths
+    val incT = withGate(1L)(MinHash.incrementalNearDuplicates(
         batch, corpus, idx, "doc_id", "text",
-        shingleLen = 3, numPerms = 32, bands = 8, threshold = 0.5,
-        tableStateRows = 1L)
+        shingleLen = 3, numPerms = 32, bands = 8, threshold = 0.5))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(incT == inc, "tabled incremental regime diverged")
-    val fullT = MinHash.nearDuplicates(
+    val fullT = withGate(1L)(MinHash.nearDuplicates(
         corpus.unionByName(batch), "doc_id", "text",
-        shingleLen = 3, numPerms = 32, bands = 8, threshold = 0.5,
-        tableStateRows = 1L)
+        shingleLen = 3, numPerms = 32, bands = 8, threshold = 0.5))
       .select("id_a", "id_b").as[(Long, Long)].collect()
       .filter(p => p._1 >= 10 || p._2 >= 10).toSet
     assert(fullT == full, "tabled batch regime diverged")

@@ -84,8 +84,8 @@ class BfsSpec extends SparkSpec {
     import spark.implicits._
     def tabled(edges: Seq[(Long, Long)], seeds: Seq[Long],
         maxHops: Int): Map[Long, Long] =
-      Bfs.distances(edges.toDF("s", "d").repartition(4), "s", "d",
-          seeds.toDF("node"), maxHops, tableStateRows = 1L)
+      withGate(1L)(Bfs.distances(edges.toDF("s", "d").repartition(4),
+          "s", "d", seeds.toDF("node"), maxHops))
         .collect()
         .map(r => r.getAs[Long]("node") -> r.getAs[Long]("dist")).toMap
     val rnd = new scala.util.Random(31)

@@ -17,14 +17,14 @@ class GraphResidueSpec extends SparkSpec {
     (4L, 5L, 9L), (2L, 6L, 1L), (10L, 11L, 2L)).toDF("s", "d", "t")
 
   private def calls(gate: Long): Seq[(String, () => DataFrame)] = Seq(
-    "Bfs" -> (() => Bfs.distances(edges, "s", "d",
-      Seq(1L).toDF("node"), 3, tableStateRows = gate)),
-    "TemporalBfs" -> (() => TemporalBfs.earliestArrival(edges, "s", "d",
-      "t", Seq((1L, 0L)).toDF("node", "t0"), 3, tableStateRows = gate)),
-    "LabelPropagation" -> (() => LabelPropagation.communities(edges, "s",
-      "d", 2, tableStateRows = gate)),
-    "RandomWalks" -> (() => RandomWalks.walks(edges, "s", "d", 2, 3,
-      tableStateRows = gate)))
+    "Bfs" -> (() => withGate(gate)(Bfs.distances(edges, "s", "d",
+      Seq(1L).toDF("node"), 3))),
+    "TemporalBfs" -> (() => withGate(gate)(TemporalBfs.earliestArrival(
+      edges, "s", "d", "t", Seq((1L, 0L)).toDF("node", "t0"), 3))),
+    "LabelPropagation" -> (() => withGate(gate)(
+      LabelPropagation.communities(edges, "s", "d", 2))),
+    "RandomWalks" -> (() => withGate(gate)(
+      RandomWalks.walks(edges, "s", "d", 2, 3))))
 
   for ((regime, gate) <- Seq(
       "pinned" -> StateTable.DefaultGateRows, "tabled" -> 1L))
@@ -56,8 +56,8 @@ class GraphResidueSpec extends SparkSpec {
     * incremental MinHash, q281 thresholded top-k). */
   private def pinnedAnswers: Seq[(String, () => DataFrame)] = Seq(
     "MassRank pinned" -> (() => MassRank.rank(edges, "s", "d", iters = 2)),
-    "MassRank tabled" -> (() => MassRank.rank(edges, "s", "d", iters = 2,
-      tableStateRows = 1L)),
+    "MassRank tabled" -> (() =>
+      withGate(1L)(MassRank.rank(edges, "s", "d", iters = 2))),
     "Mmr" -> (() => Mmr.rerank(
       Seq((0L, 1L, 9L, Seq(1L, 0L)), (0L, 2L, 8L, Seq(1L, 1L)),
         (0L, 3L, 5L, Seq(0L, 1L)), (1L, 1L, 4L, Seq(2L, 0L)),

@@ -98,9 +98,9 @@ class TemporalBfsSpec extends SparkSpec {
     def tabled(
         edges: Seq[(Long, Long, Long)], seeds: Seq[(Long, Long)],
         maxHops: Int): Map[Long, Long] =
-      TemporalBfs.earliestArrival(
+      withGate(1L)(TemporalBfs.earliestArrival(
         edges.toDF("s", "d", "t").repartition(4), "s", "d", "t",
-        seeds.toDF("node", "t0"), maxHops, tableStateRows = 1L)
+        seeds.toDF("node", "t0"), maxHops))
         .collect()
         .map(r => r.getAs[Long]("node") -> r.getAs[Long]("arrival"))
         .toMap

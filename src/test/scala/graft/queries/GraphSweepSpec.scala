@@ -216,20 +216,18 @@ class GraphSweepSpec extends SparkSpec {
     val edges = Seq.fill(400)(
         (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       .filter { case (a, b) => a != b }.toDF("s", "t")
-    // tableStateRows = 1 forces the staged path on the tiny graph
+    // gate 1 forces the staged path on the tiny graph
     val pinned = Triangles.triangles(edges, "s", "t")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
-    val tabled = Triangles.triangles(edges, "s", "t",
-        tableStateRows = 1L)
+    val tabled = withGate(1L)(Triangles.triangles(edges, "s", "t"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(tabled === pinned)
     assert(pinned.nonEmpty, "fixture must actually contain triangles")
     val dp = Triangles.doulion(edges, "s", "t", keepHex = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val dt = Triangles.doulion(edges, "s", "t", keepHex = 8,
-        tableStateRows = 1L)
+    val dt = withGate(1L)(Triangles.doulion(edges, "s", "t", keepHex = 8))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(dt === dp)
   }

@@ -92,16 +92,14 @@ class KCoreSpec extends SparkSpec {
     val pinned = nodes(KCore.core(g, "s", "t", k = 2, rounds = 8))
     assert(pinned === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
     // gate 1: every round tabled (bucketed round tables all the way)
-    assert(nodes(KCore.core(g, "s", "t", 2, 8,
-      tableStateRows = 1L)) === pinned)
+    assert(withGate(1L)(nodes(KCore.core(g, "s", "t", 2, 8))) === pinned)
     // gate 15: initial state (18 directed) and round 1 are tabled, the
     // shrunken rounds (14, then 12) re-place as pins — the migration
-    assert(nodes(KCore.core(g, "s", "t", 2, 8,
-      tableStateRows = 15L)) === pinned)
+    assert(withGate(15L)(nodes(KCore.core(g, "s", "t", 2, 8))) === pinned)
     // boundedPeel under the gate behaves identically too
     val path = (0L until 8L).map(i => (i, i + 1)).toDF("s", "t")
     for (r <- 1 to 3)
-      assert(KCore.boundedPeel(path, "s", "t", 2, r,
-        tableStateRows = 1L).count() === 9 - 2 * r, s"rounds=$r")
+      assert(withGate(1L)(KCore.boundedPeel(path, "s", "t", 2, r))
+        .count() === 9 - 2 * r, s"rounds=$r")
   }
 }

@@ -45,14 +45,18 @@ class LabelPropagationSpec extends SparkSpec {
   }
 
   test("measured shuffle width changes the plan, never the answer: " +
-    "rowsPerTask=8 (forcing a wide per-round exchange) ≡ default") {
+    "a session width of 50 (forcing a wide per-round exchange) ≡ " +
+    "default") {
     import spark.implicits._
     val rnd = new scala.util.Random(9)
     val edges = Seq.fill(200)(
       (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-    val wide = LabelPropagation.communities(
-        edges.toDF("src", "dst"), "src", "dst", rounds = 2, rowsPerTask = 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the measured width is at least the session width
+    val wide = graft.core.ScopedConf.withShufflePartitions(spark, 50) {
+      LabelPropagation.communities(
+          edges.toDF("src", "dst"), "src", "dst", rounds = 2)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(wide === reference(edges, 2))
     // and the session width is restored after the scoped rounds
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
@@ -76,9 +80,8 @@ class LabelPropagationSpec extends SparkSpec {
     val edges = Seq.fill(150)(
       (rnd.nextInt(35).toLong, rnd.nextInt(35).toLong))
     for (r <- 1 to 3) {
-      val tabled = LabelPropagation.communities(
-          edges.toDF("src", "dst"), "src", "dst", rounds = r,
-          tableStateRows = 1L)
+      val tabled = withGate(1L)(LabelPropagation.communities(
+          edges.toDF("src", "dst"), "src", "dst", rounds = r))
         .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
       assert(tabled === reference(edges, r), s"rounds=$r")
       assert(tabled === run(edges, r), s"rounds=$r vs pinned")

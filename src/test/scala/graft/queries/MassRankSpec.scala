@@ -71,8 +71,8 @@ class MassRankSpec extends SparkSpec {
         (s"n${rnd.nextInt(30)}", s"n${rnd.nextInt(30)}"))
       .toDF("src", "dst")
     val pinned = masses(MassRank.rank(e, "src", "dst", iters = 3))
-    val tabled = masses(MassRank.rank(e, "src", "dst", iters = 3,
-      tableStateRows = 1L))
+    val tabled =
+      masses(withGate(1L)(MassRank.rank(e, "src", "dst", iters = 3)))
     assert(tabled === pinned)
     assert(pinned.values.sum === pinned.size * 1000000L,
       "mass conserved in both regimes")

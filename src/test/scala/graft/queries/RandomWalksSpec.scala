@@ -52,18 +52,18 @@ class RandomWalksSpec extends SparkSpec {
 
   test("tabled regime (bucketed adjacency + per-step dirs) is " +
     "output-identical to the pinned regime") {
-    // tableStateRows = 1 forces the tabled path on the tiny graph
+    // gate 1 forces the tabled path on the tiny graph
     val pinned = RandomWalks.walks(edges, "a", "b", walksPerNode = 2,
       length = 5).as[(Long, Long, Long)].collect().toSet
-    val tabled = RandomWalks.walks(edges, "a", "b", walksPerNode = 2,
-      length = 5, tableStateRows = 1L).as[(Long, Long, Long)]
+    val tabled = withGate(1L)(RandomWalks.walks(edges, "a", "b",
+      walksPerNode = 2, length = 5)).as[(Long, Long, Long)]
       .collect().toSet
     assert(tabled == pinned)
     // and with dangling walks: empty step dirs must stay readable
     val dag = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
     val p2 = RandomWalks.walks(dag, "a", "b", 1, 4)
       .as[(Long, Long, Long)].collect().toSet
-    val t2 = RandomWalks.walks(dag, "a", "b", 1, 4, tableStateRows = 1L)
+    val t2 = withGate(1L)(RandomWalks.walks(dag, "a", "b", 1, 4))
       .as[(Long, Long, Long)].collect().toSet
     assert(t2 == p2)
   }
