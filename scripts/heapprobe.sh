@@ -4,7 +4,7 @@
 # reference's production executor size, spark_config.sh.sample:6) and
 # record finish-vs-OOM per query. Runs ProbeOne via plain `java` against
 # the compiled classes dir, so it never takes the sbt project lock
-# (compile first: sbt Test/compile). Usage:
+# (compile first: sbt compile). Usage:
 #   scripts/heapprobe.sh <sfDir> [heap] [query...]
 set -u
 cd "$(dirname "$0")/.."
@@ -14,18 +14,11 @@ shift 2 2>/dev/null || shift $# 2>/dev/null
 QUERIES=${@:-"q189_stream_interval_join q125_dimsum_exact q80_als_recommend \
 q139_incremental_neardup q145_dup_clusters q148_curation_pipeline \
 q191_triangles q100_top_missed q179_bigram_hashed q101_similar_users"}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-    java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-    sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+. scripts/jvm.sh
 for q in $QUERIES; do
   t0=$(date +%s)
-  out=$(timeout 2400 java -Xmx$HEAP -XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64 $ADD_OPENS \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" graft.ProbeOne "$q" "$DIR" 2>&1)
+  out=$(timeout 2400 "${GRAFT_JAVA[@]}" -Xmx$HEAP \
+    graft.ProbeOne "$q" "$DIR" 2>&1)
   rc=$?
   dt=$(( $(date +%s) - t0 ))
   line=$(echo "$out" | grep -oE "$q [^ ]+: [0-9.]+ s" | tail -1)

@@ -23,17 +23,11 @@ HEAP=${SPARK_DRIVER_MEM:-8g}
 # belongs on disk. Override by exporting SPARK_GRAFT_WORK_DIR yourself.
 export SPARK_GRAFT_WORK_DIR=${SPARK_GRAFT_WORK_DIR:-/tmp}
 TIMEOUT=${SPARK_GRAFT_TIMEOUT:-2400}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-    java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-    sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+. scripts/jvm.sh
 touch "$LEDGER"
 
 if [ $# -gt 0 ]; then NAMES=$(printf '%s headline\n' "$@")
-else NAMES=$(java -cp "$CP" graft.ProbeNames 2>/dev/null | sort); fi
+else NAMES=$("${GRAFT_JAVA[@]}" graft.ProbeNames 2>/dev/null | sort); fi
 
 echo "$NAMES" | while read -r q tier; do
   [ -z "$q" ] && continue
@@ -42,10 +36,7 @@ echo "$NAMES" | while read -r q tier; do
     echo "$q SKIP(verifyOnly)" >> "$LEDGER"; continue
   fi
   out=$(SPARK_GRAFT_NOWARMUP=1 timeout "$TIMEOUT" \
-    java -Xmx$HEAP -XX:+UnlockDiagnosticVMOptions \
-    -XX:GCLockerRetryAllocationCount=64 $ADD_OPENS \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" graft.ProbeOne "$q" "$DIR" 2>&1)
+    "${GRAFT_JAVA[@]}" -Xmx$HEAP graft.ProbeOne "$q" "$DIR" 2>&1)
   rc=$?
   line=$(echo "$out" | grep -oE "$q [^ ]+: [0-9.]+ s" | tail -1)
   if [ -n "$line" ]; then

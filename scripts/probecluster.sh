@@ -21,13 +21,7 @@ set -u
 cd "$(dirname "$0")/.."
 DIR=$1; shift
 TIMEOUT=${SPARK_GRAFT_TIMEOUT:-3600}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-    java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-    sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+. scripts/jvm.sh
 for q in "$@"; do
   # WIDTH=32 (not the 8 cores): shuffle width sets per-task bytes and
   # thereby session-width pinned block sizes — width 8 re-fused 30×
@@ -37,13 +31,11 @@ for q in "$@"; do
   out=$(SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
     SPARK_GRAFT_MASTER="local-cluster[2,4,4096]" SPARK_GRAFT_CPUS=8 \
     SPARK_GRAFT_WIDTH=${SPARK_GRAFT_WIDTH:-32} \
-    timeout "$TIMEOUT" java -Xmx8g -XX:+UnlockDiagnosticVMOptions \
-    -XX:GCLockerRetryAllocationCount=64 $ADD_OPENS \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+    timeout "$TIMEOUT" "${GRAFT_JAVA[@]}" -Xmx8g \
     -Dspark.executor.memory=4g \
     -Dspark.executor.extraClassPath="$PWD/target/scala-2.13/classes" \
     -Dspark.executor.extraJavaOptions="-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64" \
-    -cp "$CP" graft.ProbeOne "$q" "$DIR" 2>&1)
+    graft.ProbeOne "$q" "$DIR" 2>&1)
   rc=$?
   line=$(echo "$out" | grep -oE "$q [^ ]+: [0-9.]+ s" | tail -1)
   if [ -n "$line" ]; then echo "$line"

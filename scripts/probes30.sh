@@ -8,17 +8,10 @@ HEAP=${SPARK_DRIVER_MEM:-8g}
 # scale-probe scratch stays on disk, not the bench-scale tmpfs default
 # (ledger.sh has the full rationale)
 export SPARK_GRAFT_WORK_DIR=${SPARK_GRAFT_WORK_DIR:-/tmp}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-    java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-    sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+. scripts/jvm.sh
 for q in "$@"; do
-  out=$(timeout 2400 java -Xmx$HEAP -XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64 $ADD_OPENS \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" graft.ProbeOne "$q" "$DIR" 2>&1)
+  out=$(timeout 2400 "${GRAFT_JAVA[@]}" -Xmx$HEAP \
+    graft.ProbeOne "$q" "$DIR" 2>&1)
   line=$(echo "$out" | grep -oE "$q [^ ]+: [0-9.]+ s" | tail -1)
   [ -n "$line" ] && echo "$line" || echo "FAIL $q ($(echo "$out" | grep -m1 -oE 'Error[^;]{0,80}|Exception[^;]{0,80}'))"
 done

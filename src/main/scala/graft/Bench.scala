@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each query is fully materialized through the noop
   * sink (`.count()` would let Catalyst prune expensive columns the query
@@ -18,21 +16,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt.max(1)
-    // SPARK_GRAFT_MASTER: see ProbeOne — the local-cluster tier
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // SPARK_GRAFT_WIDTH: see ProbeOne — shuffle width is a data-volume
-    // knob, decoupled from cores for the local-cluster tier
-    val width = sys.env.getOrElse("SPARK_GRAFT_WIDTH", cpus)
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", width)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.settings(sys.env).cores
+    val spark = GraftSession.fromEnv()
 
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()

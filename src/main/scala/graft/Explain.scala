@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan of the named
   * queries (or a default set of representative ones) against a sf dir —
   * the loop used to confirm filter/projection pushdown, broadcast choices,
@@ -16,14 +14,7 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_pricing_summary", "q7_join_revenue", "q23_topk_per_group",
         "q50_ann_bruteforce", "q70_incremental_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.fromEnv()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-query scale prober: runMain graft.ProbeOne <queryName> <sfDir>
   * [explain] — times a single registry query in a fresh JVM (the
   * adjudication tool for Bench-run outliers, per the noise protocol). */
@@ -9,30 +7,7 @@ object ProbeOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = args(1)
-    // SPARK_GRAFT_CPUS mirrors Bench: the constrained-heap probes run at
-    // the reference's executor shape (small heap, FEW cores) — 32
-    // threads in a 4g heap is ~70 MB of execution memory per task, a
-    // config no production layout pairs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER overrides the local[n] master — the
-    // local-cluster[workers,cores,mem] tier runs REAL executor JVMs
-    // (closure serialization, torrent broadcast, off-heap exchange);
-    // pair it with spark.executor.extraClassPath=target/scala-2.13/classes
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // SPARK_GRAFT_WIDTH decouples shuffle width from core count: width
-    // is a DATA-VOLUME knob (it sets per-task bytes, and thereby the
-    // size of every session-width pinned block), cores a THROUGHPUT
-    // knob. The local-cluster tier proved the coupling wrong: width 8
-    // (= its cores) re-fused 30× pinned frames into ~135 MB blocks
-    // whose re-read OOMed 4 GiB executors that width 32 survives —
-    // exactly how a production job sizes partitions to data, not slots.
-    val width = sys.env.getOrElse("SPARK_GRAFT_WIDTH", cpus)
-    val spark = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", width)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     val q = graft.queries.Registry.byName(name)
     if (args.contains("explain")) q.run(spark, dir).explain("formatted")
     // warmup absorbs JVM/codegen/footer-cache startup (~15 s) so the

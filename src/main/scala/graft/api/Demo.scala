@@ -1,7 +1,6 @@
 package graft.api
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import graft.engine._
 
 /** End-to-end example of the engine's request path — the reference's
@@ -12,13 +11,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.fromEnv()
     import spark.implicits._
 
     def l(u: Int, artist: String, at: String): Listen = Listen(

@@ -94,12 +94,10 @@ final class IncrementalStatsEngine(spark: SparkSession, val workDir: String) {
     }
     if (!usable) {
       // recompute the base partial (base listens only — incremental is
-      // aggregated fresh each run and merged); localCheckpoint severs
-      // lineage so the overwrite below cannot invalidate a plan still
-      // reading the old files
-      val partial = provider.aggregate(
-        store.baseListensRange(from, to)).transform(graft.core.StateTable.pin)
-      partial.write.mode("overwrite").parquet(partialPath(statName))
+      // aggregated fresh each run and merged); the plan reads the store's
+      // base, never partialPath, so overwriting partialPath is safe
+      provider.aggregate(store.baseListensRange(from, to))
+        .write.mode("overwrite").parquet(partialPath(statName))
       Seq(Bookkeeping(from, to, new Timestamp(System.currentTimeMillis()),
           inputs))
         .toDS().repartition(1).write.mode("overwrite").json(bookPath(statName))

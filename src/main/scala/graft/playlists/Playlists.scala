@@ -9,52 +9,42 @@ import org.apache.spark.sql.functions._
   *
   *   - [[periodicJams]] — each user's top entities over a recent window,
   *     minus anything they marked hated (feedback = -1, an anti join),
-  *     shuffled with a seeded rank-over-random (the reference's ORDER BY
-  *     RANDOM(), W10 — seeded here so tests are deterministic), capped per
-  *     playlist.
+  *     shuffled by a seeded per-(user, entity) hash (the reference's ORDER
+  *     BY RANDOM(), W10 — seeded here so the playlist is reproducible),
+  *     capped per playlist.
   *   - [[topDiscoveries]] — entities first listened inside the target year
   *     with enough plays (the HAVING min(listened_at) pattern of
   *     top_discoveries.py:83-84).
   */
 object Playlists {
 
-  /** @param feedback (userCol, entityCol, score) with score == -1 for hated */
+  /** @param feedback (userCol, entityCol, score) with score == -1 for hated
+    * @param seed keys the per-(user, entity) shuffle hash, so the playlist
+    *   is a function of the rows alone — not of shuffle width, partition
+    *   layout or row order, as a partition-seeded `rand` would be */
   def periodicJams(
       listens: DataFrame, feedback: DataFrame,
       userCol: String, entityCol: String,
-      maxPerPlaylist: Int, seed: Long): DataFrame = {
-    val wShuffle = Window.partitionBy(col(userCol)).orderBy(rand(seed))
-    jamsWithShuffle(listens, feedback, userCol, entityCol, maxPerPlaylist,
-      wShuffle, pinPartitions = true)
-  }
+      maxPerPlaylist: Int, seed: Long): DataFrame =
+    periodicJamsDeterministic(listens, feedback, userCol, entityCol,
+      maxPerPlaylist, // a 64-bit hash tie falls back to the entity
+      struct(xxhash64(col(userCol), col(entityCol), lit(seed)), col(entityCol)))
 
-  /** [[periodicJams]] with a CALLER-SUPPLIED shuffle ordering — a
-    * deterministic hash key makes the whole playlist cross-engine
-    * reproducible (the oracled q113 path); seeded `rand` keeps the
-    * reference's RANDOM() character. */
+  /** [[periodicJams]] with a CALLER-SUPPLIED shuffle ordering — an md5
+    * key makes the whole playlist cross-engine reproducible (the oracled
+    * q88 and q113 paths). */
   def periodicJamsDeterministic(
       listens: DataFrame, feedback: DataFrame,
       userCol: String, entityCol: String,
-      maxPerPlaylist: Int, shuffleKey: Column): DataFrame =
-    jamsWithShuffle(listens, feedback, userCol, entityCol, maxPerPlaylist,
-      Window.partitionBy(col(userCol)).orderBy(shuffleKey),
-      pinPartitions = false)
-
-  private def jamsWithShuffle(
-      listens: DataFrame, feedback: DataFrame,
-      userCol: String, entityCol: String, maxPerPlaylist: Int,
-      wShuffle: org.apache.spark.sql.expressions.WindowSpec,
-      pinPartitions: Boolean): DataFrame = {
+      maxPerPlaylist: Int, shuffleKey: Column): DataFrame = {
     val hated = feedback.filter(col("score") === -1)
       .select(col(userCol), col(entityCol))
-    val counts = listens
+    listens
       .join(hated, Seq(userCol, entityCol), "left_anti")
       .groupBy(col(userCol), col(entityCol))
       .agg(count(lit(1)).as("listen_count"))
-    val base = // pin RNG streams to partitions for the seeded-rand path
-      if (pinPartitions) counts.repartition(col(userCol)) else counts
-    base
-      .withColumn("position", row_number().over(wShuffle))
+      .withColumn("position", row_number().over(
+        Window.partitionBy(col(userCol)).orderBy(shuffleKey)))
       .filter(col("position") <= maxPerPlaylist)
   }
 

@@ -265,11 +265,11 @@ object PipelineQueries {
 
   // --------------------------------------------------------------- q276
   /** ALS model-selection envelope (reference train_models.py:78 seeded
-    * 5:1 randomSplit, RMSE metric): split bookkeeping exact, realized
-    * fraction inside a wide binomial band, validation RMSE under a
-    * DATA-DERIVED bound: the zero predictor's RMSE on the same validation
-    * rows, times 1.05. Measured (ProbeAls of commit ee39c87,
-    * 2026-08-15): 0.889 at sf0.001,
+    * 5:1 split, here a hash of each row's ids; RMSE metric): split
+    * bookkeeping exact, realized fraction inside a wide binomial band,
+    * validation RMSE under a DATA-DERIVED bound: the zero predictor's RMSE
+    * on the same validation rows, times 1.05. Measured with the former
+    * `randomSplit` (ProbeAls of commit ee39c87, 2026-08-15): 0.889 at sf0.001,
     * 0.957 at sf0.01, 0.995 at sf0.1 — labels are capped playcounts ≈1 on
     * this near-one-purchase-per-pair corpus, so the zero predictor scores
     * ≈1.0, the measured trend rises TOWARD it but not past it, and a

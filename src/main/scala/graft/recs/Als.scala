@@ -18,7 +18,7 @@ import graft.core.ParquetFooters
   *      create_dataframes.py:172-183 mapping raw playcount → implicit
   *      confidence.
   *   3. [[train]] — spark.ml ALS, implicit prefs, coldStartStrategy=drop
-  *      (train_models.py:154-161); seeded randomSplit 5:1 (:78) with RMSE
+  *      (train_models.py:154-161); seeded 5:1 split (:78) with RMSE
   *      model selection.
   *   4. [[recommend]] — top-k per user from the model, exploded flat
   *      (recommend.py:293-305).
@@ -69,9 +69,23 @@ object Als {
     als.fit(playcounts)
   }
 
+  /** A seeded hash of each row's ids, `mod` buckets: the row's side of a
+    * split or its cross-validation fold. Unlike `randomSplit` or
+    * CrossValidator's own folds, whose draws depend on partition layout
+    * and row order, a row lands in the same bucket at any shuffle width. */
+  private def idBucket(mod: Int) =
+    pmod(xxhash64(col("als_user_id"), col("als_item_id"), lit(45L)), lit(mod))
+
+  /** The seeded 5:1 train/validation split (train_models.py:78). */
+  private[recs] def validationSplit(
+      playcounts: DataFrame): (DataFrame, DataFrame) = {
+    val inTrain = idBucket(6) < 5
+    (playcounts.filter(inTrain), playcounts.filter(!inTrain))
+  }
+
   /** Train/validation RMSE (the reference's model-selection metric). */
   def validationRmse(playcounts: DataFrame): Double = {
-    val Array(trainDf, valDf) = playcounts.randomSplit(Array(5.0, 1.0), 45L)
+    val (trainDf, valDf) = validationSplit(playcounts)
     val model = train(trainDf)
     new RegressionEvaluator().setMetricName("rmse")
       .setLabelCol("confidence").setPredictionCol("prediction")
@@ -112,9 +126,11 @@ object Als {
         .setLabelCol("confidence").setPredictionCol("prediction"))
       .setEstimatorParamMaps(grid)
       .setNumFolds(2)
+      .setFoldCol("als_fold")
       .setParallelism(3)
       .setSeed(45L)
-    val fitted = cv.fit(playcounts)
+    val fitted =
+      cv.fit(playcounts.withColumn("als_fold", idBucket(2).cast("int")))
     val best = fitted.bestModel.asInstanceOf[ALSModel]
     // avgMetrics is aligned with the param grid; RMSE → lower is better
     val bestIdx = fitted.avgMetrics.zipWithIndex.minBy(_._1)._2
@@ -231,12 +247,12 @@ object Als {
     // same materialize-once as fitEnvelope: the frame feeds the total
     // count, both split counts, the zero-predictor aggregate, training,
     // and the evaluation transform — six executions of the dense-id +
-    // join subtree without it. (randomSplit already depended on the
-    // incoming partitioning, so the oracle pins booleans, not the split.)
+    // join subtree without it. (The oracle pins booleans, not the split:
+    // the realized RMSE is a float from iterative training.)
     val pcP = graft.core.StateTable.pinOrStage(pc0, Seq.empty, "als_pc")
     val pc = pcP.df
     val n = pcP.rows // the placement's measured count — no re-count job
-    val Array(trainDf, valDf) = pc.randomSplit(Array(5.0, 1.0), 45L)
+    val (trainDf, valDf) = validationSplit(pc)
     val nTrain = trainDf.count()
     val nVal = valDf.count()
     val zeroRmse = math.sqrt(

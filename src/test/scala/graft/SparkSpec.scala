@@ -9,7 +9,9 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Listen
 
-/** Shared test harness: one local session per suite + listen fixtures. */
+/** Shared test harness: one local session per suite + listen fixtures.
+  * The session is the library's own ([[GraftSession.builder]]), so every
+  * spec runs with the graft extensions and AQE settings users get. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/sf0.001"
@@ -98,11 +100,8 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(cores = 4).master("local[4]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -32,6 +32,25 @@ class PlaylistsSpec extends SparkSpec {
     assert(again == jam.collect().map(_.toString).sorted.toSeq)
   }
 
+  test("periodicJams gives the same playlist at shuffle width 1 and 7") {
+    import spark.implicits._
+    // 6 users × 30 entities capped at 5: which five a user gets, and in
+    // which order, must not depend on how the rows are partitioned
+    val listens = (for (u <- 1 to 6; e <- 1 to 30; _ <- 0 to (u + e) % 3)
+      yield (u, s"e$e")).toDF("user_id", "entity")
+    val feedback = Seq((1, "e1", -1)).toDF("user_id", "entity", "score")
+    def jam(width: Int): Seq[String] =
+      graft.core.ScopedConf.withShufflePartitions(spark, width) {
+        Playlists.periodicJams(listens, feedback,
+            "user_id", "entity", maxPerPlaylist = 5, seed = 7L)
+          .select("user_id", "position", "entity")
+          .collect().map(_.toString).sorted.toSeq
+      }
+    val narrow = jam(1)
+    assert(narrow.size == 30)
+    assert(jam(7) == narrow)
+  }
+
   test("topDiscoveries: first listen inside year + min plays") {
     import spark.implicits._
     val listens = Seq(

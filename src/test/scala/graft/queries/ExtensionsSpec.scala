@@ -37,11 +37,17 @@ class ExtensionsSpec extends SparkSpec {
         .head().getLong(0)
       assert(h == graft.functions.StringPolyHash62.hash("abc"))
 
-      // injected functions are session-scoped: the original session still
-      // needs explicit registration (its registry was built without the
-      // extension), proving no cross-session registry leakage
-      graft.functions.GraftFunctions.register(prev)
-      assert(prev.sql("SELECT graft_poly_hash62('abc')").head().getLong(0) == h)
+      // injected functions are session-scoped: a session built without
+      // the extension needs explicit registration, proving no
+      // cross-session registry leakage
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      val plain = SparkSession.builder().getOrCreate()
+      assert(plain ne injected)
+      intercept[org.apache.spark.sql.AnalysisException](
+        plain.sql("SELECT graft_poly_hash62('abc')").collect())
+      graft.functions.GraftFunctions.register(plain)
+      assert(plain.sql("SELECT graft_poly_hash62('abc')").head().getLong(0) == h)
     } finally {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)
@@ -116,6 +122,39 @@ class ExtensionsSpec extends SparkSpec {
           Option(x.getMessage).toSeq ++ messages(x.getCause))
       assert(messages(e).exists(_.contains("expects 2 arguments")),
         s"unexpected: $e")
+    } finally {
+      SparkSession.setDefaultSession(prev)
+      SparkSession.setActiveSession(prev)
+    }
+  }
+
+  test("fromEnv resolves master, cores and width from one env map") {
+    import graft.GraftSession.{Settings, settings}
+    val n = Runtime.getRuntime.availableProcessors()
+    assert(settings(Map.empty) == Settings(s"local[$n]", n, n))
+    assert(settings(Map("SPARK_GRAFT_CPUS" -> "8")) == Settings("local[8]", 8, 8))
+    assert(settings(Map("SPARK_GRAFT_CPUS" -> "8", "SPARK_GRAFT_WIDTH" -> "32",
+      "SPARK_GRAFT_MASTER" -> "local[2]")) == Settings("local[2]", 8, 32))
+  }
+
+  test("a fromEnv session runs the graft functions and the levenshtein rewrite") {
+    import org.apache.spark.sql.catalyst.expressions.{Levenshtein, Literal}
+    val prev = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s = graft.GraftSession.fromEnv(Map("SPARK_GRAFT_WIDTH" -> "3"))
+      assert(s ne prev)
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "3")
+      assert(s.sql("SELECT graft_poly_hash62('x')").head().getLong(0) ==
+        graft.functions.StringPolyHash62.hash("x"))
+      val levs = s.range(3)
+        .selectExpr("cast(id AS string) AS a", "concat('k', id) AS b")
+        .where("levenshtein(a, b) <= 2")
+        .queryExecution.optimizedPlan.flatMap(_.expressions)
+        .flatMap(_.collect { case l: Levenshtein => l })
+      assert(levs.nonEmpty && levs.forall(_.threshold.contains(Literal(2))),
+        s"not rewritten: $levs")
     } finally {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)
